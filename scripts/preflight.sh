@@ -20,6 +20,15 @@ sbt -batch "compile; Test/compile" >/tmp/preflight_compile.log 2>&1 || {
   exit 1
 }
 
+# perfbench is its own sbt build over ../src/main: a main-tree deletion
+# that breaks the benchmark harness must fail here, not in the bench
+echo "[preflight] perfbench compile..."
+(cd perfbench && sbt -batch compile) >/tmp/preflight_perfbench.log 2>&1 || {
+  echo "[preflight] PERFBENCH COMPILE FAILED — tail of log:"
+  tail -30 /tmp/preflight_perfbench.log
+  exit 1
+}
+
 out=/tmp/preflight_verify
 rm -rf "$out"
 echo "[preflight] graft.Verify @ sf0.001..."

@@ -202,28 +202,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
       .max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // production parity with Verify: extensions installed
-    GraftExtensions.register(spark)
-    // ...and a RELIABLE checkpoint dir. Without one, iterative ops
-    // (qc07's connected components) fall back to localCheckpoint,
-    // which pins RDD blocks in executor memory until the
-    // ContextCleaner happens to GC them — measured as bimodal qc07
-    // reps (7s vs 45s) inside one otherwise-idle bench JVM.
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+    val spark = GraftSession.build("graft-bench", Some(cpus))
     // warm the JVM/codegen/FS paths so the first measured query isn't
     // charged session startup
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -284,7 +267,7 @@ object Bench {
     val memBuf = new Array[Long]((calibMemBytes / 8).toInt)
     def calibrate(): (Double, Double, Double) = {
       val cpu = timed2 { () =>
-        spark.range(0, calibRows, 1, cpus.toInt)
+        spark.range(0, calibRows, 1, cpus)
           .selectExpr("xxhash64(id) AS h").selectExpr("bit_xor(h) AS x")
           .collect(): Unit
       }
@@ -375,7 +358,7 @@ object Bench {
         now - ownSamples.head._1 > 120e9.toLong) ownSamples.remove(0): Unit
     }
     def ownShareCores: Double =
-      ownShare(ownSamples.toSeq, System.nanoTime(), ownCpuSec, cpus.toInt)
+      ownShare(ownSamples.toSeq, System.nanoTime(), ownCpuSec, cpus)
     def waitQuiet(): Unit = {
       sampleOwn()
       while (loadavg.headOption.exists(_ - ownShareCores > loadLimit) &&

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.IntegerType
   * Two wiring paths:
   *  - cluster: `--conf spark.sql.extensions=graft.GraftExtensions`
   *    (injected at session build, the SparkSessionExtensions contract)
-  *  - existing session / tests: `GraftExtensions.register(spark)`
+  *  - existing session: `GraftExtensions.register(spark)`, which
+  *    [[GraftSession.build]] calls for every main and the tests
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

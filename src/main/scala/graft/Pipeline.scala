@@ -711,10 +711,8 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val a = parseArgs(args)
-    val spark = SparkSession.builder()
-      .appName(s"graft-${a.getOrElse("stage", "pack")}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.build(
+      s"graft-${a.getOrElse("stage", "pack")}", cpus = None)
     val info = run(spark, a)
     // stage outputs are lazily-built shard manifests — force + report
     info.collect().foreach(r => println(s"[pipeline] $r"))

@@ -48,12 +48,12 @@ import org.apache.spark.sql.functions._
   *    round, and at 100 TB one extra full pass over the label table per
   *    round. The checkpoint also narrows to (id, label) — the carried
   *    `old` column existed only for that count.
-  *  - Lineage is truncated every round with a RELIABLE snapshot when
-  *    `sparkContext.setCheckpointDir` has been called (alternating
-  *    parquet slots bound retained storage at O(1) snapshots); sessions
-  *    without a checkpoint dir — unit tests, local runs — fall back to
-  *    `localCheckpoint`, where the observed metrics are read after the
-  *    materializing action the same way.
+  *  - Lineage is truncated every round with a RELIABLE snapshot under
+  *    the session's checkpoint dir (alternating parquet slots bound
+  *    retained storage at O(1) snapshots). A session without one is
+  *    refused: `localCheckpoint` would pin every round's blocks in
+  *    executor memory and lose them with the executor. GraftSession
+  *    sets one on local masters; a cluster sets `spark.checkpoint.dir`.
   *  - Phase-2 convergence is a (count, xxhash64-sum) checksum over the
   *    rewritten edge set, likewise observed on the checkpoint write —
   *    at the fixpoint small-star emits the exact star graph (every
@@ -97,7 +97,9 @@ object ConnectedComponents {
       maxIters: Int = 50,
       propagationBudget: Int = StarFallbackAfter): (DataFrame, CcStats) = {
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
+    val ckptDir = spark.sparkContext.getCheckpointDir
+    require(ckptDir.isDefined, "ConnectedComponents needs a reliable " +
+      "checkpoint dir: set spark.checkpoint.dir")
     // Reliable path: snapshot each round to ALTERNATING parquet dirs
     // under the checkpoint dir. df.checkpoint() would also be reliable
     // but leaves every superseded round's snapshot on the FS for the
@@ -105,8 +107,7 @@ object ConnectedComponents {
     // long job would hold one full vertex-label copy PER ROUND. Two
     // slots bound retained storage at O(1) snapshots; the final slot
     // stays readable for the returned DataFrame.
-    val runDir = sc.getCheckpointDir.map(b =>
-      s"$b/cc-${java.util.UUID.randomUUID()}")
+    val runDir = s"${ckptDir.get}/cc-${java.util.UUID.randomUUID()}"
     var slot = 0
     // Checkpoint df and return (reread frame projected to `keep`,
     // observed metric values in `aggs` order). The aggregates are
@@ -120,23 +121,15 @@ object ConnectedComponents {
     def ckptObserved(df: DataFrame, keep: Seq[String],
         names: Seq[String], aggs: Seq[Column],
         path: String): (DataFrame, Seq[Any]) = {
-      runDir match {
-        case Some(_) =>
-          val obs = Observation()
-          df.observe(obs, aggs.head, aggs.tail: _*)
-            .select(keep.map(col): _*)
-            .write.mode("overwrite").parquet(path)
-          val got = obs.get
-          (spark.read.parquet(path), names.map(got))
-        case None =>
-          val lc = df.localCheckpoint()
-          val row = lc.agg(aggs.head, aggs.tail: _*).head()
-          (lc.select(keep.map(col): _*),
-            names.indices.map(row.get))
-      }
+      val obs = Observation()
+      df.observe(obs, aggs.head, aggs.tail: _*)
+        .select(keep.map(col): _*)
+        .write.mode("overwrite").parquet(path)
+      val got = obs.get
+      (spark.read.parquet(path), names.map(got))
     }
     def slotPath(): String = {
-      val p = s"${runDir.getOrElse("")}/s$slot"
+      val p = s"$runDir/s$slot"
       slot = (slot + 1) % 2
       p
     }
@@ -145,7 +138,7 @@ object ConnectedComponents {
       .union(edges.select(col("b_id").as("src"), col("a_id").as("dst"))),
       keep = Seq("src", "dst"),
       names = Seq("n"), aggs = Seq(count(lit(1)).as("n")),
-      path = s"${runDir.getOrElse("")}/sym")
+      path = s"$runDir/sym")
     val symCount = symCounts.head.asInstanceOf[Long]
     // untouched vertices (no edge) label themselves; they re-enter in
     // the final assembly, never in the loop

@@ -34,7 +34,7 @@ final class KmvBuffer(val k: Int) {
   *
   * Deterministic by construction (a set minimum is order-free), so the
   * sketch path and qd13's exact-window path agree on the k-th hash
-  * bit-for-bit — asserted in `KmvSketchSpec`, measured in ScaleProbe.
+  * bit-for-bit — asserted in `KmvSketchSpec`.
   */
 case class KmvAgg(
     child: Expression,

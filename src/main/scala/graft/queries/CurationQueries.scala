@@ -101,21 +101,8 @@ object CurationQueries extends QueryRegistry {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
-  /** Probe hook (Qd25Probe --cold-cache): drop + unpersist this
-    * session's exploded-shingle relations so a rep pays the cold
-    * persist build, isolating its share of first-rep wall. */
-  private[graft] def clearExplodedCache(s: SparkSession): Unit =
-    explodedCache.synchronized {
-      val m = explodedCache.remove(s)
-      if (m != null) m.values().forEach { df =>
-        try df.unpersist(blocking = true): Unit
-        catch { case _: Exception => () }
-      }
-    }
-
-  /** Core of qd11 over any exploded (doc_id, sh) frame — shared with
-    * the scale probe. */
-  private[graft] def decontamFrom(sh: DataFrame): DataFrame = {
+  /** Core of qd11 over any exploded (doc_id, sh) frame. */
+  private def decontamFrom(sh: DataFrame): DataFrame = {
     val evalGrams = sh.filter(col("doc_id") % EvalMod === 0)
       .select(col("sh")).distinct()
     val train = sh.filter(col("doc_id") % EvalMod =!= 0)
@@ -147,14 +134,13 @@ object CurationQueries extends QueryRegistry {
        |FROM tr LEFT JOIN ev ON tr.sh = ev.sh
        |GROUP BY tr.doc_id ORDER BY tr.doc_id""".stripMargin
 
-  /** Core of qd12 over any exploded (doc_id, sh) frame — shared with
-    * the scale probe. */
   /** Per-gram document frequency over an exploded shingle frame — the
     * one corpus-sized aggregation the span filter AND the span scrub
     * both need; exposed so a funnel computes it once. */
   private[graft] def gramDfFrom(sh: DataFrame): DataFrame =
     sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
 
+  /** Core of qd12 over any exploded (doc_id, sh) frame. */
   private[graft] def dupSpansFrom(sh: DataFrame,
       dfOpt: Option[DataFrame] = None): DataFrame = {
     val df = dfOpt.getOrElse(gramDfFrom(sh))
@@ -636,10 +622,8 @@ object CurationQueries extends QueryRegistry {
     * real (non-empty, non-total) subset. */
   private val Tau = 0.3
 
-  /** Core of qs05 over any (vec_id, label, embedding) frame — shared
-    * with the scale probe (which dials cluster count with n so
-    * in-cluster pair work stays bounded). */
-  private[graft] def semDedupFrom(e: DataFrame, tau: Double): DataFrame = {
+  /** Core of qs05 over any (vec_id, label, embedding) frame. */
+  private def semDedupFrom(e: DataFrame, tau: Double): DataFrame = {
     val pruned = e.as("a")
       .join(e.as("b"), col("a.label") === col("b.label") &&
         col("a.vec_id") < col("b.vec_id"))
@@ -727,7 +711,7 @@ object CurationQueries extends QueryRegistry {
       rates: Seq[(String, Int)], defaultRate: Int): Column =
     bucketCol < mixRateExpr(rates, defaultRate)
 
-  private[graft] def mixProjection(
+  private def mixProjection(
       docs: DataFrame,
       rates: Seq[(String, Int)] = MixRates,
       defaultRate: Int = 0): DataFrame =
@@ -1179,8 +1163,7 @@ object CurationQueries extends QueryRegistry {
   }
 
   /** Query-path body — (rank, doc_id, score) for a (doc_id, score)
-    * frame — reused by ScaleProbe's A/B against the naive global
-    * window. Unsorted: the gate adds the presentation orderBy.
+    * frame. Unsorted: the gate adds the presentation orderBy.
     *
     * Bins are an EXPLICIT deterministic function of the row: boundaries
     * come from one eager approxQuantile pass collected to nParts-1
@@ -1201,7 +1184,7 @@ object CurationQueries extends QueryRegistry {
     * the price of removing the correctness-by-plan-shape dependency —
     * callers exporting from a hot cache can persist `scored` first to
     * collapse the extra column reads. */
-  private[graft] def curriculumOf(
+  private def curriculumOf(
       scored: DataFrame, nParts: Int): DataFrame = {
     import scored.sparkSession.implicits._
     val probs = (1 until nParts).map(_.toDouble / nParts).toArray
@@ -1448,7 +1431,7 @@ object CurationQueries extends QueryRegistry {
     * sequential semantics CurateStage documents — so a drift in any
     * stage's decision for any single document shifts a sum. Bench
     * note: this is deliberately the heaviest gate row (~6 s at
-    * sf0.1); CurationProbe's stage attribution puts 85% of it in the
+    * sf0.1); a per-stage attribution (SCALE.md) put 85% of it in the
     * near-dup stage (LSH + exact Jaccard + checkpointed CC — the
     * transitive correctness the funnel exists for), adjudicated as an
     * explained floor in SCALE.md, sub-linear at sf1. The stats
@@ -1493,7 +1476,7 @@ object CurationQueries extends QueryRegistry {
     * is pinned where it can bind — CurateStageSpec's cap-1 row (pairs
     * vanish, members survive as singletons) and qd27's own gate (cap
     * binds on the raw corpus at sf0.1). */
-  private[graft] def curateFunnelCapped(
+  private def curateFunnelCapped(
       s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val res = graft.curate.CurateStage.run(

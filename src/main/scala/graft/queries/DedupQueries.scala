@@ -150,7 +150,7 @@ object DedupQueries extends QueryRegistry {
     lshPairsFrom(signatures(s, dir)).orderBy($"a_id", $"b_id")
   }
 
-  /** qd03 core over any signature frame — shared with the scale probe. */
+  /** qd03 core over any signature frame. */
   private[graft] def lshPairsFrom(sigIn: DataFrame): DataFrame =
     lshPairsFor(sigIn, NumBands, BandSize)
 
@@ -296,7 +296,7 @@ object DedupQueries extends QueryRegistry {
   /** Exact-verify stage alone, over an externally supplied candidate
     * frame — shared by qd04/curate (candidates from the production
     * layout) and qd18 (candidates from each swept layout). */
-  private[graft] def jaccardOverCands(
+  private def jaccardOverCands(
       docs: DataFrame, cand: DataFrame, tau: Double): DataFrame = {
     val (sh, sizes) = shingleFrames(docs)
     verifyCands(cand, sh, sizes, tau)
@@ -465,9 +465,8 @@ object DedupQueries extends QueryRegistry {
     * key cannot see THROUGH a listing cache upstream of it (the
     * CorpusOpsSpec staleness test refreshes first for exactly this
     * reason). A caller holding the pre-overwrite DataFrame OBJECT
-    * likewise sees the old FileIndex. `invalidateRelationCache`
-    * remains the escape hatch for writers that also preserve
-    * mtime+length. */
+    * likewise sees the old FileIndex, and a writer that also preserves
+    * mtime+length is not detected. */
   private def cachedRelation(owner: DataFrame, tag: String)(
       build: => DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{
@@ -530,21 +529,9 @@ object DedupQueries extends QueryRegistry {
     }
   }
 
-  /** Drop (and unpersist) every memoized relation for `spark` — the
-    * escape hatch for inputs mutated in place by a non-Spark writer
-    * (file names unchanged, so the snapshot key cannot see the edit). */
-  private[graft] def invalidateRelationCache(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    shCache.synchronized {
-      val m = shCache.remove(spark)
-      if (m != null) m.values().forEach { df =>
-        try df.unpersist(): Unit catch { case _: Exception => }
-      }
-    }
-
-  /** `private[graft]` so Qd26Probe can phase-attribute over the SAME
-    * memoized relation the query's five consumers share. */
-  private[graft] def cachedShingleRelation(docs: DataFrame): DataFrame = {
+  /** The memoized (doc_id, shingle-hash) relation the containment
+    * query's five consumers share. */
+  private def cachedShingleRelation(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     cachedRelation(docs, "sh")(docs.select($"doc_id",
       explode(hashedShingles(words($"text"))).as("sh")))
@@ -1091,7 +1078,7 @@ object DedupQueries extends QueryRegistry {
       .orderBy($"new_id")
   }
 
-  /** qd15 core over any signature frame — shared with the scale probe.
+  /** qd15 core over any signature frame.
     * `isNew` partitions the docs into standing corpus (false) and
     * increment (true); candidates are new-vs-corpus plus
     * new-vs-earlier-new (id order = arrival order).
@@ -1282,9 +1269,8 @@ object DedupQueries extends QueryRegistry {
     * (joinable md5 of the empty string) where SQL's array_to_string
     * yields NULL (never joins) — the explicit null gate keeps both
     * engines on SQL semantics: a null text has no fingerprint and can
-    * never be anyone's duplicate. `private[graft]` so BloomProbe
-    * derives its unpruned baseline from the same key. */
-  private[graft] def prefixFingerprint(text: Column, n: Int): Column =
+    * never be anyone's duplicate. */
+  private def prefixFingerprint(text: Column, n: Int): Column =
     when(text.isNotNull,
       md5(to_binary(concat_ws(" ", slice(split(lower(text), " "), 1, n)),
         lit("utf-8"))))
@@ -1677,8 +1663,8 @@ object DedupQueries extends QueryRegistry {
   private def kmvDistinct(s: SparkSession, dir: String): DataFrame =
     kmvDistinctOf(Tables(s, dir).documents)
 
-  /** The (source, 60-bit bigram hash) projection shared by the gate
-    * query and ScaleProbe's sketch-vs-exact comparison. */
+  /** The (source, 60-bit bigram hash) projection shared by the KMV
+    * gate query, the curation sketches and the quality queries. */
   private[graft] def bigramHashes(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val base = docs.select($"source", words($"text").as("ws"))
@@ -1692,8 +1678,7 @@ object DedupQueries extends QueryRegistry {
           16, 10).cast("long").as("h"))
   }
 
-  /** Query-path body, reused by `ScaleProbe` on replicated frames. */
-  private[graft] def kmvDistinctOf(docs: DataFrame): DataFrame = {
+  private def kmvDistinctOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     val hashed = bigramHashes(docs).distinct()
@@ -1944,8 +1929,7 @@ object DedupQueries extends QueryRegistry {
   private def cdcChunks(s: SparkSession, dir: String): DataFrame =
     cdcStatsOf(Tables(s, dir).documents)
 
-  /** Query-path body over any (source, text) frame — reused by
-    * ScaleProbe so the scale evidence measures THIS plan. The chunk
+  /** Query-path body over any (source, text) frame. The chunk
     * pass is the [[graft.functions.Cdc]] mapPartitions kernel (one
     * MessageDigest, one pass) — CdcSpec asserts it equals
     * [[cdcStatsDeclarativeOf]] value-for-value, and the DuckDB oracle

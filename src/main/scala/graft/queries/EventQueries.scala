@@ -164,13 +164,13 @@ object EventQueries extends QueryRegistry {
     * answer is deterministic; the oracle is DuckDB's NATIVE ASOF LEFT
     * JOIN — an independent implementation of the semantics, not a
     * mirrored construction. */
-  /** Core of qe06 over any events frame — shared with the scale probe.
+  /** Core of qe06 over any events frame.
     * The purchase payload travels as ONE struct through the window so
     * `last(_, ignoreNulls)` picks every field from the SAME purchase
     * row — per-column carries would mix fields across purchases when a
     * later purchase has a null attribute (DuckDB's ASOF JOIN, the
     * oracle, is row-atomic; AsOfJoinSpec pins the null-value case). */
-  private[graft] def asofFrom(ev: DataFrame): DataFrame = {
+  private def asofFrom(ev: DataFrame): DataFrame = {
     import ev.sparkSession.implicits._
     // per-(user, ts) dedup by window rank, NOT max_by: Spark's max_by
     // returns the max-key row's value even when NULL, DuckDB's arg_max
@@ -291,7 +291,7 @@ object EventQueries extends QueryRegistry {
       .orderBy($"user_id", $"click_ts", $"purchase_ts")
   }
 
-  /** qe08 core over any events frame — shared with the scale probe. */
+  /** qe08 core over any events frame. */
   private[graft] def intervalBinFrom(ev: DataFrame): DataFrame = {
     import ev.sparkSession.implicits._
     // bin columns carry the __graft_bin prefix so the
@@ -308,21 +308,6 @@ object EventQueries extends QueryRegistry {
     binned.join(purchases,
       binned("__graft_bin") === purchases("__graft_bin_p") &&
         binned("user_id") === purchases("p_user") &&
-        $"purchase_ts" > $"click_ts" &&
-        $"purchase_ts" <= $"click_ts" + expr("INTERVAL 1 HOUR"))
-      .select($"user_id", $"click_ts", $"purchase_ts")
-  }
-
-  /** The naive plan qe08 replaces: equi-join on user_id alone, window
-    * predicate as a post-filter — per-user cross product (probe-only). */
-  private[graft] def intervalNaiveFrom(ev: DataFrame): DataFrame = {
-    import ev.sparkSession.implicits._
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"user_id", $"ts".as("click_ts"))
-    val purchases = ev.filter($"event_type" === "purchase")
-      .select($"user_id".as("p_user"), $"ts".as("purchase_ts"))
-    clicks.join(purchases,
-      clicks("user_id") === purchases("p_user") &&
         $"purchase_ts" > $"click_ts" &&
         $"purchase_ts" <= $"click_ts" + expr("INTERVAL 1 HOUR"))
       .select($"user_id", $"click_ts", $"purchase_ts")

@@ -490,29 +490,6 @@ object MediaQueries extends QueryRegistry {
         id, if (take == 0) nx else nx + 3)
     }
 
-  /** Probe hook (MediaGateProbe): the staged hash relation of one mm
-    * near-dup query — same fixture content, fingerprint, and window as
-    * the registered query, without the decode counters. */
-  private[graft] def probeStagedSigs(s: SparkSession, dir: String,
-      name: String): DataFrame = {
-    val (content, fp, w) = name match {
-      case "mm27_video_near_dup" =>
-        (mm27Video, MediaDedup.exactVideoFingerprint(
-          graft.pack.FrameSource.Mp4Frames), 3)
-      case "mm28_video_phash_dup" =>
-        (mm28Video, MediaDedup.perceptualVideoFingerprint(
-          graft.pack.FrameSource.Mp4Frames), 3)
-      case "mm29_audio_near_dup" =>
-        (mm29Audio, MediaDedup.signPatternAudioFingerprint(50), 3)
-      case "mm31_image_phash_dup" =>
-        (udf((id: Long, t: Int) => mm31Image(id, t)),
-          MediaDedup.perceptualImageFingerprint(), 1)
-      case other => sys.error(s"no staged-sig fixture for $other")
-    }
-    MediaDedup.stageShingles(twoTakeMedia(s, dir, content),
-      WdsQueries.scratchDir("graft_gateprobe"), fp, w)
-  }
-
   private def nearDupPairs(s: SparkSession, dir: String, prefix: String,
       content: org.apache.spark.sql.expressions.UserDefinedFunction,
       fingerprint: Array[Byte] => IndexedSeq[String],
@@ -1005,7 +982,7 @@ object MediaQueries extends QueryRegistry {
     * never all-pairs; cross-doc matches require the sign pattern's
     * BOTH coefficient classes (d mod 97 AND d mod 89) to coincide,
     * so true clusters stay tiny until corpus sizes pass ~8.6k docs. */
-  /** the mm29 fixture audio (lifted for MediaGateProbe) */
+  /** the mm29 fixture audio */
   private val mm29Audio = {
     val W = 50
     udf { (id: Long, take: Int) =>
@@ -1085,7 +1062,7 @@ object MediaQueries extends QueryRegistry {
     * find nothing), yet every doc's pair passes the same 0.4 shingle
     * Jaccard. Scale shape identical to mm27: staged single decode,
     * only (doc, vid, hash) rows cross an exchange, never all-pairs. */
-  /** the mm28 fixture video (lifted for MediaGateProbe) */
+  /** the mm28 fixture video */
   private val mm28Video = udf { (id: Long, take: Int) =>
     val fx = graft.multimodal.h264.H264Fixtures
     val nx = (6 + (id % 3) * 3).toInt

@@ -354,7 +354,7 @@ object WdsQueries extends QueryRegistry {
     * THE one helper for shard-url listings (same O(#files) driver
     * footprint as the reference's os.listdir). Use [[numericShardUrls]]
     * when unpadded shard numbers must order numerically. */
-  private[graft] def shardUrls(info: DataFrame): Seq[String] =
+  private def shardUrls(info: DataFrame): Seq[String] =
     info.select(col("url")).collect()
       .map(_.getString(0)).toSeq.sorted
 

@@ -1,9 +1,10 @@
 package org.apache.spark
 
-/** Probe-side bridge: `SparkContext.listenerBus` is `private[spark]`,
-  * but the measurement probes need a real barrier ("all posted task-end
-  * events delivered") instead of a fixed sleep when reading listener
-  * aggregates. Same one-file-in-the-spark-package technique as
+/** Listener-bus bridge: `SparkContext.listenerBus` is `private[spark]`,
+  * but a listener's reader (perfbench's per-layer tracer,
+  * `graft.Explain`'s executed-plan capture) needs a real barrier ("all
+  * posted events delivered") instead of a fixed sleep. Same
+  * one-file-in-the-spark-package technique as
   * [[org.apache.spark.sql.GraftShim]].
   */
 object GraftSparkShim {
@@ -11,7 +12,7 @@ object GraftSparkShim {
     * has been delivered to all registered listeners, waiting up to
     * `timeoutMillis` (the no-arg `waitUntilEmpty()` throws
     * `TimeoutException` after a 10 s default — a backed-up bus after a
-    * heavy rep would abort a whole probe run, converting a valid
+    * heavy rep would abort a whole traced run, converting a valid
     * measurement into FAILED; r16 ADVICE). On timeout the barrier
     * degrades to a loud warning: the measurement proceeds with
     * possibly-incomplete listener aggregates rather than dying. */

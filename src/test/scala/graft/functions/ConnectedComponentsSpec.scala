@@ -126,17 +126,38 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` with the shared session's checkpoint dir set to
+    * `dir`, then restores the previous one for later suites. */
+  private def withCheckpointDir[T](dir: Option[String])(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    sc.setCheckpointDir(dir.orNull)
+    try body finally sc.setCheckpointDir(prev.orNull)
+  }
+
   test("reliable checkpoint path (checkpoint dir set) gives same answer") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
+    withCheckpointDir(Some(dir)) {
       val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
       val verts = Seq(1L, 2L, 3L, 10L, 11L).toDF("id")
       val got = ConnectedComponents.run(edges, verts)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
         11L -> 10L))
-    } finally spark.sparkContext.setCheckpointDir(null)
+    }
+    assert(spark.sparkContext.getCheckpointDir.isDefined)
+  }
+
+  test("no checkpoint dir: run refuses, naming spark.checkpoint.dir") {
+    import spark.implicits._
+    val edges = Seq((2L, 1L)).toDF("a_id", "b_id")
+    val verts = Seq(1L, 2L).toDF("id")
+    val e = withCheckpointDir(None) {
+      intercept[IllegalArgumentException](
+        ConnectedComponents.run(edges, verts))
+    }
+    assert(e.getMessage.contains("spark.checkpoint.dir"), e.getMessage)
+    assert(spark.sparkContext.getCheckpointDir.isDefined)
   }
 }

@@ -6,12 +6,17 @@ import org.apache.spark.sql.functions._
 
 class BinnedIntervalJoinSpec extends SparkSpec {
 
-  private def withRule[T](body: => T): T = {
+  /** Runs `body` with the rule installed exactly once (or not at all),
+    * whatever the shared session carries, then restores its rules. */
+  private def withRules[T](rule: Boolean)(body: => T): T = {
     val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ BinnedIntervalJoin
+    val others = prev.filterNot(_ == BinnedIntervalJoin)
+    spark.experimental.extraOptimizations =
+      if (rule) others :+ BinnedIntervalJoin else others
     try body
     finally spark.experimental.extraOptimizations = prev
   }
+  private def withRule[T](body: => T): T = withRules(rule = true)(body)
 
   /** Events around epoch 0 (negative micros included) plus a dense hot
     * user — the shapes that break naive trunc-vs-floor reasoning and
@@ -47,7 +52,8 @@ class BinnedIntervalJoinSpec extends SparkSpec {
 
   test("rewrite preserves results exactly (boundaries, negative epochs)") {
     val ev = fixture.cache()
-    val plain = naive(ev).collect().map(_.toString).sorted
+    val plain = withRules(rule = false) {
+      naive(ev).collect().map(_.toString).sorted }
     val rewritten = withRule { naive(ev).collect().map(_.toString).sorted }
     assert(plain.nonEmpty)
     assert(rewritten.toSeq == plain.toSeq)

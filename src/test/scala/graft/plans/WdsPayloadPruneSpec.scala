@@ -9,9 +9,6 @@ import org.apache.spark.sql.functions._
   * that could observe other payloads blocks the rewrite. */
 class WdsPayloadPruneSpec extends SparkSpec {
 
-  // register() is idempotent; the rule rides extraOptimizations
-  graft.GraftExtensions.register(spark)
-
   private lazy val tar: String = {
     val dir = java.nio.file.Files.createTempDirectory("wpp").toString
     val out = new java.io.FileOutputStream(s"$dir/shard.tar")
