@@ -56,3 +56,5 @@ grep -q ", 0 bad ==" "$check_log" || {
   exit 1
 }
 echo "[preflight] OK — safe to snapshot"
+# reported, not gated: the net main-tree Scala line count the roadmap tracks
+echo "[preflight] src/main Scala lines: $(find src/main -name '*.scala' | xargs cat | wc -l)"

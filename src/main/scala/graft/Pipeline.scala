@@ -321,7 +321,9 @@ object Pipeline {
           containmentDfCeil = a.get("containment-df-ceil").map(_.toInt),
           tokenBudgetDiv = a.get("token-budget-div").map(_.toInt))
         val res = graft.curate.CurateStage.run(docs, opts)
-        res.curated.write.mode("overwrite").parquet(req("save-path"))
+        // stats is a local one-row frame: it outlives the flag cache
+        try res.curated.write.mode("overwrite").parquet(req("save-path"))
+        finally res.close()
         res.stats
       // audit stage: schema-generic profile + rule validation over any
       // parquet input. `--rules "pos=l_quantity > 0;flag=l_returnflag

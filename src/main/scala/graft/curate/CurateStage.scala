@@ -1,7 +1,8 @@
 package graft.curate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** The user-facing curation stage: one pass over a raw document table
@@ -55,10 +56,13 @@ import org.apache.spark.storage.StorageLevel
   * duplicate ids should be resolved upstream (they usually indicate an
   * ingest bug worth failing loudly on, not masking).
   *
-  * `run` materializes the flag frame eagerly (the stats ARE an
-  * aggregate of it) and releases every internal cache before returning;
-  * the returned frames are plain projections of the persisted flags —
-  * call [[CurateResult.close]] when done with them.
+  * `run` builds the funnel as one plan with one cache, the flag frame,
+  * materialized by one action whose observed aggregate IS the stats
+  * frame. The opt-in near-dup and containment stages also persist
+  * their input, because their helpers run their own jobs over it; `run`
+  * releases those before returning, and the flag frame too when it
+  * fails. The returned frames are plain projections of the persisted
+  * flags — call [[CurateResult.close]] when done with them.
   */
 object CurateStage {
 
@@ -116,10 +120,90 @@ object CurateStage {
       1).otherwise(0)
   }
 
+  /** Sets `keep` for the survivors of stage `prev`: a document `prev`
+    * dropped stays 0; a survivor takes `stage`'s flag, or `missing`
+    * when `stage` has no row for it. A stage that is off carries
+    * `prev` through unchanged. */
+  private def gate(flags: DataFrame, prev: String, keep: String,
+      stage: Option[DataFrame], missing: Int): DataFrame =
+    stage.fold(flags.withColumn(keep, col(prev)))(k =>
+      flags.join(k, Seq("doc_id"), "left")
+        .withColumn(keep, when(col(prev) === 1,
+          coalesce(col(keep), lit(missing))).otherwise(0)))
+
   /** Sequential funnel; input needs (doc_id, text, lang), extra columns
     * pass through to the curated output. */
   def run(docs: DataFrame, opts: CurateOptions): CurateResult = {
-    val spark = docs.sparkSession
+    require(!opts.softDedup || opts.nearDupJaccard.nonEmpty,
+      "softDedup re-weights near-dup clusters — it needs nearDupJaccard")
+    // the soft-dedup + containment combination is rejected: a weighted
+    // member could be the container of its own representative — the
+    // interaction needs its own design, not a silent guess
+    require(!(opts.softDedup && opts.containmentTau.nonEmpty),
+      "softDedup + containmentTau is unsupported: containment would " +
+        "drop into clusters soft dedup re-weighted")
+    require(opts.tokenBudgetDiv.isEmpty || docs.columns.contains("source"),
+      "tokenBudgetDiv needs a `source` column on the input")
+    // every frame this run persists; all but the returned flag frame
+    // are released when `run` exits, and that one too when it throws
+    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = {
+      caches += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    try {
+      val (flags, weightsOpt) = funnel(docs, opts, persisted)
+      val all = persisted(flags.withColumn("curated", col("budget_keep")))
+      // The one action: materialize the flag frame with the
+      // audit-funnel aggregate observed on the same job, so the stats
+      // cost no second pass over the flag table.
+      val statsObs = Observation()
+      // a NULL source would silently vanish in the quota joins (Spark
+      // joins never match NULL keys) — counted on the same job, failed
+      // loudly below
+      val nullSource = opts.tokenBudgetDiv.map(_ =>
+        count(when(col("decontam_keep") === 1 && col("source").isNull, 1))
+          .as("null_source"))
+      all.observe(statsObs,
+        count(lit(1)).as("n_docs"),
+        (Keeps.map(k => sum(col(k)).as(k)) ++ nullSource :+
+          sum(col("curated")).as("n_curated")): _*)
+        .count(): Unit
+      val got = statsObs.get
+      require(nullSource.isEmpty || got("null_source") == 0L,
+        "tokenBudgetDiv: input has survivors with NULL source")
+
+      val curatedBase = all.filter(col("curated") === 1)
+        .drop(Keeps :+ "curated": _*)
+      // soft-dedup mode: attach the per-doc sampling weight (1e6 for
+      // singletons; every curated doc passed the near-dup stage, so the
+      // left join always hits — coalesce guards regardless)
+      val curated = weightsOpt.fold(curatedBase)(wf =>
+        curatedBase.join(wf, Seq("doc_id"), "left")
+          .withColumn("weight_ppm",
+            coalesce(col("weight_ppm"), lit(1000000L))))
+      // the observed metrics ARE the stats aggregate — surface them as
+      // the same one-row frame the `all.agg(...)` spelling produced
+      // (schema and null-on-empty behavior identical)
+      val statNames = "n_docs" +: Keeps :+ "n_curated"
+      val stats = docs.sparkSession.createDataFrame(
+        java.util.List.of(Row.fromSeq(statNames.map(got(_)))),
+        StructType(statNames.map(StructField(_, LongType))))
+      caches -= all // handed to the result: CurateResult.close releases it
+      CurateResult(curated, stats, all)
+    } finally caches.foreach(_.unpersist(blocking = true)) // as in close()
+  }
+
+  private val Keeps = Seq("quality_keep", "mix_keep", "exact_keep",
+    "near_keep", "cont_keep", "span_keep", "decontam_keep", "budget_keep")
+
+  /** The funnel's flag frame (input columns plus every `Keeps` flag, text
+    * scrubbed when `spanScrub` is on) and, in soft mode, the per-doc
+    * `weight_ppm` frame. Unmaterialized; the opt-in stages whose helpers
+    * run their own jobs persist their input through `persisted`. */
+  private def funnel(docs: DataFrame, opts: CurateOptions,
+      persisted: DataFrame => DataFrame)
+      : (DataFrame, Option[DataFrame]) = {
     val withQ = docs.withColumn("quality_keep", qualityKeep(opts.minWords))
 
     // mix is a row-local decision (md5-bucket vs dialed rate) — the
@@ -133,30 +217,26 @@ object CurateStage {
       when(col("quality_keep") === 1 &&
         graft.queries.CurationQueries
           .mixKeptExpr(opts.rates, opts.defaultRate), 1).otherwise(0))
-    val s2 = withM.filter(col("mix_keep") === 1)
 
-    val exactK = s2
+    // exact dedup: one hash aggregate over the mix survivors and one
+    // doc_id join. Both the flag spine and the span branch below read
+    // withE; with no cache between them the planner reuses the
+    // aggregate's exchange, so the dedup runs once per plan.
+    val exactK = withM.filter(col("mix_keep") === 1)
       .groupBy(md5(to_binary(col("text"), lit("utf-8"))).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), lit(1).as("exact_keep"))
-    val withE = withM.join(exactK, Seq("doc_id"), "left")
-      .withColumn("exact_keep", coalesce(col("exact_keep"), lit(0)))
+    val withE = gate(withM, "mix_keep", "exact_keep", Some(exactK), 0)
     // 3b. near-dup (opt-in): MinHash/LSH candidates → exact Jaccard
     // verify → connected components; one survivor (min doc_id) per
     // near-dup CLUSTER — the transitive qd09 rule, not the pairwise
     // qd08 one, so chains (A~B~C with A≁C) keep exactly one doc.
     // Runs over exact-dedup survivors: verbatim copies are already
-    // gone, so LSH candidates here are genuine near-dups. The
-    // survivors frame is persisted only on this opt-in path (the
-    // signature + verify + CC chain scans it repeatedly).
-    val s3Opt = opts.nearDupJaccard.map { _ =>
-      withE.filter(col("exact_keep") === 1)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    require(!opts.softDedup || opts.nearDupJaccard.nonEmpty,
-      "softDedup re-weights near-dup clusters — it needs nearDupJaccard")
+    // gone, so LSH candidates here are genuine near-dups.
     val clustersOpt = opts.nearDupJaccard.map { tau =>
-      val s3 = s3Opt.get
+      // persisted: ConnectedComponents runs its own jobs (one
+      // checkpoint write per round) over pairs and vertices of it
+      val s3 = persisted(withE.filter(col("exact_keep") === 1))
       val pairs = graft.queries.DedupQueries
         .jaccardFrom(s3.select(col("doc_id"), col("text")), tau,
           opts.lshBucketCap)
@@ -183,38 +263,22 @@ object CurateStage {
           .select(col("id").as("doc_id"),
             expr("CAST(1000000 AS BIGINT) div csize").as("weight_ppm"))
       }
-    val withN = nearK.fold(
-      withE.withColumn("near_keep", col("exact_keep")))(nk =>
-      withE.join(nk, Seq("doc_id"), "left")
-        .withColumn("near_keep", coalesce(col("near_keep"), lit(0))))
+    val withN = gate(withE, "exact_keep", "near_keep", nearK, 0)
     // 3c. containment (opt-in, `containmentTau`) — the qd24 policy
     // over near-dup survivors: a document near-CONTAINED in a larger
     // survivor (excerpt/quote) drops; maximal documents keep. Runs
-    // after near-dup so cluster-resemblance is already resolved; the
-    // soft-dedup combination is rejected (a weighted member could be
-    // the container of its own representative — the interaction needs
-    // its own design, not a silent guess).
-    require(!(opts.softDedup && opts.containmentTau.nonEmpty),
-      "softDedup + containmentTau is unsupported: containment would " +
-        "drop into clusters soft dedup re-weighted")
-    val s3pre = withN.filter(col("near_keep") === 1)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // after near-dup so cluster-resemblance is already resolved.
     val contK = opts.containmentTau.map { tau =>
+      // persisted: containmentDropped localCheckpoints a per-doc
+      // sketch of it (its own job) before the funnel's count reads it
+      val s3c = persisted(withN.filter(col("near_keep") === 1))
       graft.queries.DedupQueries.containmentDropped(
-        s3pre.select(col("doc_id"), col("text")), tau,
+        s3c.select(col("doc_id"), col("text")), tau,
         opts.containmentDfCeil)
         .select(col("doc_id"), lit(0).as("cont_keep"))
     }
-    val withC = contK.fold(
-      withN.withColumn("cont_keep", col("near_keep")))(ck =>
-      withN.join(ck, Seq("doc_id"), "left")
-        .withColumn("cont_keep",
-          when(col("near_keep") === 1, coalesce(col("cont_keep"), lit(1)))
-            .otherwise(0)))
-    val s3n =
-      if (contK.isEmpty) s3pre
-      else withC.filter(col("cont_keep") === 1)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    val withC = gate(withN, "near_keep", "cont_keep", contK, 1)
+    val s3n = withC.filter(col("cont_keep") === 1)
 
     // Span-statistics basis: in SOFT mode a kept near-dup cluster must
     // read as ONE document — exactly the rationale for running spans
@@ -228,19 +292,11 @@ object CurateStage {
       cc.filter(col("id") === col("label")).select(col("id").as("doc_id")))
     val spanDocs = repIds.fold(s3n.select(col("doc_id"), col("text")))(
       r => s3n.select(col("doc_id"), col("text")).join(r, Seq("doc_id")))
+    // not cached: the span filter counts gram document frequency in the
+    // same scan of the explode. The opt-in decontam and scrub stages
+    // explode again rather than hold the corpus-sized gram frame.
     val sh = graft.functions.ShingleHash.exploded(spanDocs, opts.gramK)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // gram document frequency: computed ONCE — the span filter and the
-    // span scrub both consume it, and recomputing it would run the
-    // corpus-sized gram aggregation twice per job. Persisted only when
-    // the scrub actually reuses it (it is distinct-gram-sized).
-    val gramDf0 = graft.queries.CurationQueries.gramDfFrom(sh)
-    val gramDfPersisted =
-      if (opts.spanScrub) Some(gramDf0.persist(StorageLevel.MEMORY_AND_DISK))
-      else None
-    val gramDf = gramDfPersisted.getOrElse(gramDf0)
-    val spanKRep = graft.queries.CurationQueries
-      .dupSpansFrom(sh, Some(gramDf))
+    val spanKRep = graft.queries.CurationQueries.dupSpansFrom(sh)
       .select(col("doc_id"),
         when(col("dup_frac") <= opts.maxDupFrac, 1).otherwise(0)
           .as("span_keep"))
@@ -255,7 +311,7 @@ object CurateStage {
     val decontamK = opts.evalPath.map { path =>
       // the eval table needs only `text`; ids are synthesized because
       // only the distinct gram set is used
-      val eval = spark.read.parquet(path)
+      val eval = docs.sparkSession.read.parquet(path)
         .filter(col("text").isNotNull)
         .select(monotonically_increasing_id().as("doc_id"), col("text"))
       val evalGrams = graft.functions.ShingleHash.exploded(eval, opts.gramK)
@@ -281,9 +337,9 @@ object CurateStage {
     // and the scrub cleans the rest. Case is preserved; matching is
     // case-folded like every shingle decision in the funnel.
     val scrubbed = if (opts.spanScrub) {
-      val dup = gramDf.filter(col("df") >= 2 &&
-          opts.scrubDfCeil.map(c => col("df") <= c)
-            .getOrElse(lit(true)))
+      val dup = graft.queries.CurationQueries.gramDfFrom(sh)
+        .filter(col("df") >= 2 &&
+          opts.scrubDfCeil.map(c => col("df") <= c).getOrElse(lit(true)))
         .select(col("sh"))
       val posF = graft.functions.ShingleHash.positional(
         s3n.select(col("doc_id"), col("text")), opts.gramK)
@@ -294,18 +350,9 @@ object CurateStage {
         .select(col("doc_id"), col("scrubbed")))
     } else None
 
-    val flagged0 = withC.join(spanK, Seq("doc_id"), "left")
-      .withColumn("span_keep", coalesce(col("span_keep"), lit(0)))
-    val flagged = decontamK.fold(
-      flagged0.withColumn("decontam_keep", col("span_keep")))(d =>
-      flagged0.join(d, Seq("doc_id"), "left")
-        .withColumn("decontam_keep",
-          when(col("span_keep") === 1, coalesce(col("decontam_keep"),
-            lit(0))).otherwise(0)))
+    val flagged = gate(gate(withC, "cont_keep", "span_keep", Some(spanK), 0),
+      "span_keep", "decontam_keep", decontamK, 0)
 
-    val keeps = Seq("quality_keep", "mix_keep", "exact_keep",
-      "near_keep", "cont_keep", "span_keep", "decontam_keep",
-      "budget_keep")
     val flaggedS = scrubbed.fold(flagged)(sc =>
       flagged.join(sc, Seq("doc_id"), "left")
         .withColumn("text", coalesce(col("scrubbed"), col("text")))
@@ -314,66 +361,12 @@ object CurateStage {
     // as the FINAL selection: per-source α=1/2 token quotas over the
     // funnel's survivors, filled greedily in stable md5(doc_id) order.
     // Runs over post-scrub text — the token mass a run would ingest.
-    val flaggedB = opts.tokenBudgetDiv.fold(
-      flaggedS.withColumn("budget_keep", col("decontam_keep"))) { div =>
-      require(flaggedS.columns.contains("source"),
-        "tokenBudgetDiv needs a `source` column on the input")
+    val picks = opts.tokenBudgetDiv.map { div =>
       val surv = flaggedS.filter(col("decontam_keep") === 1)
         .select(col("doc_id"), col("source"), col("text"))
-      // a NULL source would silently vanish in the quota joins (Spark
-      // joins never match NULL keys) — fail loudly instead (one extra
-      // action over the survivor frame, per run, mostly cache-served)
-      require(surv.filter(col("source").isNull).isEmpty,
-        "tokenBudgetDiv: input has survivors with NULL source")
-      val picks = graft.queries.CurationQueries
-        .tokenBudgetFrom(surv, div)
-        .select(col("doc_id"), lit(1).as("bk"))
-      flaggedS.join(picks, Seq("doc_id"), "left")
-        .withColumn("budget_keep",
-          when(col("decontam_keep") === 1, coalesce(col("bk"), lit(0)))
-            .otherwise(0))
-        .drop("bk")
+      graft.queries.CurationQueries.tokenBudgetFrom(surv, div)
+        .select(col("doc_id"), lit(1).as("budget_keep"))
     }
-    val all = flaggedB.withColumn("curated", col("budget_keep"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize, with the audit-funnel aggregate observed on the SAME
-    // job (r17 optimization: the stats frame used to be a second
-    // action over the cache — one extra job per run locally, one extra
-    // pass over the flag table at scale). Then release the
-    // stage-internals (blocking for the same reason as
-    // CurateResult.close).
-    val statsObs = org.apache.spark.sql.Observation()
-    all.observe(statsObs,
-      count(lit(1)).as("n_docs"),
-      (keeps.map(k => sum(col(k)).as(k)) :+
-        sum(col("curated")).as("n_curated")): _*)
-      .count(): Unit
-    sh.unpersist(blocking = true)
-    gramDfPersisted.foreach(_.unpersist(blocking = true): Unit)
-    s3n.unpersist(blocking = true)
-    if (!(s3n eq s3pre)) s3pre.unpersist(blocking = true): Unit
-    s3Opt.foreach(_.unpersist(blocking = true))
-
-    val curatedBase = all.filter(col("curated") === 1)
-      .drop(keeps :+ "curated": _*)
-    // soft-dedup mode: attach the per-doc sampling weight (1e6 for
-    // singletons; every curated doc passed the near-dup stage, so the
-    // left join always hits — coalesce guards regardless)
-    val curated = weightsOpt.fold(curatedBase)(wf =>
-      curatedBase.join(wf, Seq("doc_id"), "left")
-        .withColumn("weight_ppm",
-          coalesce(col("weight_ppm"), lit(1000000L))))
-    // the observed metrics ARE the stats aggregate — surface them as
-    // the same one-row frame the `all.agg(...)` spelling produced
-    // (schema and null-on-empty behavior identical)
-    val statNames = "n_docs" +: keeps :+ "n_curated"
-    val got = statsObs.get
-    val stats = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row
-        .fromSeq(statNames.map(got(_)))),
-      org.apache.spark.sql.types.StructType(statNames.map(n =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.LongType))))
-    CurateResult(curated, stats, all)
+    (gate(flaggedS, "decontam_keep", "budget_keep", picks, 0), weightsOpt)
   }
 }

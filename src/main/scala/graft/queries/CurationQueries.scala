@@ -134,17 +134,19 @@ object CurationQueries extends QueryRegistry {
        |FROM tr LEFT JOIN ev ON tr.sh = ev.sh
        |GROUP BY tr.doc_id ORDER BY tr.doc_id""".stripMargin
 
-  /** Per-gram document frequency over an exploded shingle frame — the
-    * one corpus-sized aggregation the span filter AND the span scrub
-    * both need; exposed so a funnel computes it once. */
+  /** Per-gram document frequency (sh, df) over an exploded shingle
+    * frame — the duplicated-gram set of the span scrubs (qd21, qd25 and
+    * the curate funnel's `spanScrub`). */
   private[graft] def gramDfFrom(sh: DataFrame): DataFrame =
     sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
 
-  /** Core of qd12 over any exploded (doc_id, sh) frame. */
-  private[graft] def dupSpansFrom(sh: DataFrame,
-      dfOpt: Option[DataFrame] = None): DataFrame = {
-    val df = dfOpt.getOrElse(gramDfFrom(sh))
-    sh.join(df, "sh")
+  /** Core of qd12 over any exploded (doc_id, sh) frame. Gram document
+    * frequency is a window over `sh` (grams are distinct per document,
+    * so the row count is the df): one scan of the explode, where an
+    * aggregate joined back would read it twice. */
+  private[graft] def dupSpansFrom(sh: DataFrame): DataFrame =
+    sh.withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"),
         sum(when(col("df") >= 2, 1).otherwise(0)).cast("int")
@@ -153,11 +155,10 @@ object CurationQueries extends QueryRegistry {
         round(col("n_dup_spans").cast("double") / col("n_spans"), 6)
           .as("dup_frac"))
       .orderBy(col("doc_id"))
-  }
 
   /** qd12: per-document duplicated-span fraction — shingle document
-    * frequency (first agg, keys are 16-hex hashes), joined back to each
-    * document's shingles (second agg on doc_id). */
+    * frequency (a window over the 16-hex gram hashes), then one
+    * aggregate on doc_id. */
   private def dupSpans(s: SparkSession, dir: String): DataFrame =
     dupSpansFrom(exploded(s, dir))
 
@@ -219,9 +220,8 @@ object CurationQueries extends QueryRegistry {
     * distinct frame, so the corpus is shingled once for qd11/qd12/qd21
     * together. */
   private def spanScrub(s: SparkSession, dir: String): DataFrame = {
-    val sh = exploded(s, dir)
-    val dup = sh.groupBy(col("sh"))
-      .agg(count(lit(1)).as("df")).filter(col("df") >= 2).select(col("sh"))
+    val dup = gramDfFrom(exploded(s, dir))
+      .filter(col("df") >= 2).select(col("sh"))
     spanScrubFrom(
       Tables(s, dir).documents.select(col("doc_id"), col("text")),
       graft.functions.ShingleHash.positional(
@@ -321,9 +321,7 @@ object CurationQueries extends QueryRegistry {
     * the production form of qd21 (which this generalizes: minRun = 1
     * and no ceiling reproduce it exactly, spec-pinned). */
   private def spanScrubRuns(s: SparkSession, dir: String): DataFrame = {
-    val sh = exploded(s, dir)
-    val dup = sh.groupBy(col("sh"))
-      .agg(count(lit(1)).as("df"))
+    val dup = gramDfFrom(exploded(s, dir))
       .filter(col("df") >= 2 && col("df") <= DfCeilGate)
       .select(col("sh"))
     spanScrubRunsFrom(

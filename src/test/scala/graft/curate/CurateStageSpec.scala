@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * brute-force recomputation, exact duplicates keep one survivor (the
   * flag-parallel design bug), null text drops at quality instead of
   * crashing the shingle kernel, decontamination drops exactly the
-  * overlap (both sides asserted), and the CLI stage round-trips. */
+  * overlap (both sides asserted), a run leaves no cache behind once
+  * closed (or once it fails), and the CLI stage round-trips. */
 class CurateStageSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -31,12 +32,12 @@ class CurateStageSpec extends SparkSpec {
   test("curated set equals brute-force sequential funnel") {
     import spark.implicits._
     val docs = docsDf().select($"doc_id", $"text", $"lang")
-      .as[(Long, String, String)].collect()
+      .as[(Long, String, String)].collect().toSeq
     val opts = CurateStage.CurateOptions(
       minWords = 30, maxDupFrac = 0.5,
       rates = Seq("en" -> 80), defaultRate = 50, gramK = 5)
 
-    def quality(t: String): Boolean = {
+    def quality(t: String): Boolean = t != null && {
       val ws = t.split(" ", -1)
       val meanLen = (t.length - (ws.length - 1)).toDouble / ws.length
       ws.length >= 30 && meanLen >= 3.0 && meanLen <= 10.0 &&
@@ -48,29 +49,54 @@ class CurateStageSpec extends SparkSpec {
         md5hex(id.toString).take(6), 16) % 100).toInt
       bucket < (if (lang == "en") 80 else 50)
     }
-    val s2 = docs.filter(d => quality(d._2) && mixKept(d._1, d._3))
-    val s3 = s2.groupBy(d => md5hex(d._2))
-      .map { case (_, ds) => ds.minBy(_._1) }.toSeq
-    val df = s3.flatMap(d => grams(d._2).map(_ -> d._1))
-      .groupBy(_._1).map { case (g, rs) => g -> rs.map(_._2).toSet.size }
-    val want = s3.filter { d =>
-      val gs = grams(d._2)
-      gs.count(g => df(g) >= 2).toDouble / gs.size <= 0.5
-    }.map(_._1).toSet
+    def funnel(rows: Seq[(Long, String, String)]): Set[Long] = {
+      val s2 = rows.filter(d => quality(d._2) && mixKept(d._1, d._3))
+      val s3 = s2.groupBy(d => md5hex(d._2))
+        .map { case (_, ds) => ds.minBy(_._1) }.toSeq
+      val df = s3.flatMap(d => grams(d._2).map(_ -> d._1))
+        .groupBy(_._1).map { case (g, rs) => g -> rs.map(_._2).toSet.size }
+      s3.filter { d =>
+        val gs = grams(d._2)
+        gs.count(g => df(g) >= 2).toDouble / gs.size <= 0.5
+      }.map(_._1).toSet
+    }
 
-    val res = CurateStage.run(docsDf(), opts)
-    val got = res.curated.select($"doc_id").as[Long].collect().toSet
-    val st = res.stats.collect().head
-    res.close()
-    assert(got == want)
-    assert(st.getAs[Long]("n_docs") == docs.length)
-    assert(st.getAs[Long]("n_curated") == want.size)
-    // funnel counts are monotone non-increasing
-    val funnel = Seq("quality_keep", "mix_keep", "exact_keep",
-      "span_keep", "decontam_keep").map(st.getAs[Long])
-    assert(funnel == funnel.sorted.reverse, funnel.mkString(","))
-    assert(want.nonEmpty && want.size < docs.length,
-      s"degenerate funnel: ${want.size}/${docs.length}")
+    // hostile rows, ids above the fixture's and mix-kept: a verbatim
+    // copy of a doc that passes quality but is mix-dropped (the copy is
+    // its group's lowest SURVIVING id, so it must keep), a one-word
+    // edit of a curated doc (a near copy), and a null-text row
+    val ids = Iterator.from(docs.map(_._1).max.toInt + 1).map(_.toLong)
+      .filter(mixKept(_, "en"))
+    val (copyId, nearId, nullId) = (ids.next(), ids.next(), ids.next())
+    val twin = docs.find(d => quality(d._2) && !mixKept(d._1, d._3)).get
+    val curated0 = funnel(docs)
+    val base = docs.find(d => curated0.contains(d._1)).get
+    val hostile = Seq(
+      (copyId, twin._2, "en"),
+      (nearId, base._2.split(" ").init.mkString(" ") + " zzzz", "en"),
+      (nullId, null.asInstanceOf[String], "en"))
+    val withHostile = docsDf().select($"doc_id", $"text", $"lang")
+      .union(hostile.toDF("doc_id", "text", "lang"))
+    assert(funnel(docs ++ hostile).contains(copyId),
+      "the mix-dropped twin's copy should survive exact dedup")
+
+    Seq(docsDf() -> docs, withHostile -> (docs ++ hostile)).foreach {
+      case (input, rows) =>
+        val want = funnel(rows)
+        val res = CurateStage.run(input, opts)
+        val got = res.curated.select($"doc_id").as[Long].collect().toSet
+        val st = res.stats.collect().head
+        res.close()
+        assert(got == want)
+        assert(st.getAs[Long]("n_docs") == rows.length)
+        assert(st.getAs[Long]("n_curated") == want.size)
+        // funnel counts are monotone non-increasing
+        val counts = Seq("quality_keep", "mix_keep", "exact_keep",
+          "span_keep", "decontam_keep").map(st.getAs[Long])
+        assert(counts == counts.sorted.reverse, counts.mkString(","))
+        assert(want.nonEmpty && want.size < rows.length,
+          s"degenerate funnel: ${want.size}/${rows.length}")
+    }
   }
 
   test("exact duplicates keep one survivor; null text drops cleanly") {
@@ -338,6 +364,28 @@ class CurateStageSpec extends SparkSpec {
       docs.drop("source"),
       CurateStage.CurateOptions(minWords = 1, tokenBudgetDiv = Some(4))))
     assert(e.getMessage.contains("source"))
+  }
+
+  test("a run that fails releases every cache it made; close() releases " +
+    "the flag frame of one that succeeds") {
+    import spark.implicits._
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val docs = (0L until 8L).map { i =>
+      (i, s"u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f", "en",
+        if (i == 3) null else "alpha")
+    }.toDF("doc_id", "text", "lang", "source")
+    val opts = CurateStage.CurateOptions(minWords = 1,
+      tokenBudgetDiv = Some(4))
+    val before = persisted
+    val e = intercept[IllegalArgumentException](CurateStage.run(docs, opts))
+    assert(e.getMessage.contains("NULL source"))
+    assert((persisted -- before).isEmpty,
+      s"failed run leaked ${persisted -- before}")
+    val res = CurateStage.run(docs.na.fill("alpha", Seq("source")), opts)
+    assert(res.curated.count() > 0)
+    res.close()
+    assert((persisted -- before).isEmpty,
+      s"closed run leaked ${persisted -- before}")
   }
 
   test("CLI --stage curate writes curated parquet and audit stats") {

@@ -191,6 +191,27 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  /** The exchanges among `es` that carry document text (or a words or
+    * grams array), each asserted to be doc_id hash-partitioned: the only
+    * way the curate funnel may move text. */
+  private def docIdTextExchanges(
+      es: Seq[ShuffleExchangeExec]): Seq[ShuffleExchangeExec] = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val payload = Set("text", "ws", "words", "grams")
+    es.filter(_.child.output.exists(a => payload(a.name))).map { e =>
+      val names = e.child.output.map(_.name).toSet
+      e.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.flatMap(_.references)
+            .exists(_.name == "doc_id"),
+            s"text crosses a non-doc_id exchange: " +
+              s"${h.expressions.mkString(",")} carrying $names")
+        case other => fail(s"text crosses a $other exchange: $names")
+      }
+      e
+    }
+  }
+
   test("CurateStage internals: text moves ONLY on the doc_id flag " +
     "spine, never through the near-dup/span/decontam machinery") {
     // qc07 gates the funnel's ANSWERS; this audits its executed plans.
@@ -202,7 +223,6 @@ class PlanAuditSpec extends SparkSpec {
     // flag joins, and only a bounded number of them.
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -228,29 +248,58 @@ class PlanAuditSpec extends SparkSpec {
         }
         val plans = expand(res.curated.queryExecution.executedPlan) ++
           expand(res.stats.queryExecution.executedPlan)
-        val payload = Set("text", "ws", "words", "grams")
         val exchanges = plans.flatMap(shuffles).distinct
         assert(exchanges.nonEmpty, "expected exchanges in the funnel")
-        var spine = 0
-        exchanges.foreach { e =>
-          val names = e.child.output.map(_.name).toSet
-          if (names.exists(payload)) {
-            spine += 1
-            e.outputPartitioning match {
-              case h: HashPartitioning =>
-                assert(h.expressions.flatMap(_.references)
-                  .exists(_.name == "doc_id"),
-                  s"text crosses a non-doc_id exchange: " +
-                    s"${h.expressions.mkString(",")} carrying $names")
-              case other =>
-                fail(s"text crosses a $other exchange: $names")
-            }
-          }
-        }
+        val spine = docIdTextExchanges(exchanges).size
         // the flag spine: quality/mix carries through the mix join, the
         // exact/near/span/decontam flag joins — pinned so a new
         // text-bearing exchange can't slip in unnoticed
         assert(spine <= 6, s"$spine text-bearing exchanges (expected <= 6)")
+      } finally res.close()
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("CurateStage default path is one plan with one cache: one " +
+    "shingle explode, one exact-dedup aggregate, text only on doc_id " +
+    "exchanges") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Min, Partial}
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val res = graft.curate.CurateStage.run(
+        graft.Tables(spark, sf).documents
+          .select(col("doc_id"), col("text"), col("lang")),
+        graft.curate.CurateStage.CurateOptions())
+      try {
+        val top = res.curated.queryExecution.executedPlan
+        val rels = top.collect { case s: InMemoryTableScanExec => s.relation }
+        assert(rels.size == 1, s"${rels.size} cached relations:\n$top")
+        // the flag frame's own plan must hold no further cache; a
+        // ReusedExchange is a reference, not a second computation, so
+        // its subtree is not descended into
+        val inner = rels.head.cachedPlan
+        val nested = inner.collect { case s: InMemoryTableScanExec => s }
+        assert(nested.isEmpty, s"${nested.size} nested caches:\n$inner")
+        val explodes = inner.collect {
+          case m: MapPartitionsExec
+              if m.func.getClass.getName.contains("ShingleHash") => m
+        }
+        assert(explodes.size == 1,
+          s"${explodes.size} shingle explodes:\n$inner")
+        // min(doc_id) per content hash is the funnel's only min()
+        val dedupAggs = inner.collect {
+          case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+            e.mode == Partial && e.aggregateFunction.isInstanceOf[Min]) => a
+        }
+        assert(dedupAggs.size == 1,
+          s"${dedupAggs.size} exact-dedup aggregates:\n$inner")
+        assert(inner.exists(_.isInstanceOf[ReusedExchangeExec]),
+          s"the spine and the span branch share no exchange:\n$inner")
+        docIdTextExchanges(shuffles(inner))
       } finally res.close()
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
