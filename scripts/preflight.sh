@@ -8,8 +8,9 @@
 # commit:
 #   bash scripts/preflight.sh
 #
-# Exit 0 = compile green AND every registered oracle query hash-green
-# at sf0.001. Anything else = do not snapshot; fix first.
+# Exit 0 = compile green, perfbench harness tests green AND every
+# registered oracle query hash-green at sf0.001. Anything else = do not
+# snapshot; fix first.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -20,11 +21,12 @@ sbt -batch "compile; Test/compile" >/tmp/preflight_compile.log 2>&1 || {
   exit 1
 }
 
-# perfbench is its own sbt build over ../src/main: a main-tree deletion
-# that breaks the benchmark harness must fail here, not in the bench
-echo "[preflight] perfbench compile..."
-(cd perfbench && sbt -batch compile) >/tmp/preflight_perfbench.log 2>&1 || {
-  echo "[preflight] PERFBENCH COMPILE FAILED — tail of log:"
+# perfbench is its own sbt build over ../src/main: a main-tree change
+# that breaks the benchmark harness or its probes (the decorators wrap
+# FrameSource and SubwordModel.encode) must fail here, not in the bench
+echo "[preflight] perfbench test..."
+(cd perfbench && sbt -batch test) >/tmp/preflight_perfbench.log 2>&1 || {
+  echo "[preflight] PERFBENCH TEST FAILED — tail of log:"
   tail -30 /tmp/preflight_perfbench.log
   exit 1
 }

@@ -17,7 +17,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   *     skipped by wire type, so real model files parse.
   *  2. unigram-LM segmentation: whitespace is escaped to ▁ (U+2581,
   *     with the add-dummy-prefix convention), then Viterbi picks the
-  *     piece sequence maximizing the summed piece scores; characters no
+  *     piece sequence maximizing the summed piece scores, finding each
+  *     position's piece edges by walking a char trie of the spellings
+  *     (no substring, no map lookup per candidate); characters no
   *     piece covers fall back to their UTF-8 `<0xXX>` BYTE pieces
   *     (byte_fallback), or the UNKNOWN piece when the model has none.
   *
@@ -30,16 +32,15 @@ final class SentencePieceModel(
 
   import SentencePieceModel._
 
-  private val idOf: Map[String, Int] =
-    pieces.zipWithIndex.map { case (p, i) => p.piece -> i }.toMap
-  private val maxPieceLen =
-    if (pieces.isEmpty) 0 else pieces.iterator.map(_.piece.length).max
+  // The derived tables are @transient: a model serialized into a task
+  // ships only `pieces` and rebuilds them on first use.
+  @transient private lazy val trie = new PieceTrie(pieces)
   private val unkId =
     pieces.indexWhere(_.pieceType == TypeUnknown) match {
       case -1 => 0
       case i => i
     }
-  private val byteIds: Array[Int] = {
+  @transient private lazy val byteIds: Array[Int] = {
     val arr = Array.fill(256)(-1)
     pieces.zipWithIndex.foreach { case (p, i) =>
       if (p.pieceType == TypeByte) {
@@ -50,10 +51,10 @@ final class SentencePieceModel(
     }
     arr
   }
-  val hasByteFallback: Boolean = byteIds.forall(_ >= 0)
+  @transient lazy val hasByteFallback: Boolean = byteIds.forall(_ >= 0)
   /** id → byte value for canonical `<0xAB>` pieces; malformed TypeByte
     * spellings decode as a clear error, not a substring crash. */
-  private val byteValueOf: Map[Int, Byte] =
+  @transient private lazy val byteValueOf: Map[Int, Byte] =
     byteIds.zipWithIndex.collect {
       case (id, v) if id >= 0 => id -> v.toByte
     }.toMap
@@ -63,40 +64,37 @@ final class SentencePieceModel(
   private def escape(text: String): String =
     "▁" + text.replace(' ', '▁')
 
-  /** ids for one char position when no piece covers it: its UTF-8 byte
-    * pieces, or the UNK id. */
-  private def fallbackIds(c: String): Seq[Int] =
-    if (hasByteFallback) c.getBytes(UTF_8).toSeq.map(b => byteIds(b & 0xff))
-    else Seq(unkId)
-
   def encode(text: String): IndexedSeq[Int] = {
     if (text.isEmpty) return IndexedSeq.empty
+    val t = trie
+    val bytes = byteIds
+    val byteFallback = hasByteFallback
     val s = escape(text)
     val n = s.length
     // Viterbi over char positions: best score to reach i, with back ptr
-    val best = Array.fill(n + 1)(Double.NegativeInfinity)
-    val backPiece = Array.fill(n + 1)(-1) // piece id of last edge
-    val backFrom = Array.fill(n + 1)(-1)
+    val best = new Array[Double](n + 1)
+    java.util.Arrays.fill(best, Double.NegativeInfinity)
+    val backPiece = new Array[Int](n + 1) // piece id of last edge
+    val backFrom = new Array[Int](n + 1)
     best(0) = 0.0
     var i = 0
     while (i < n) {
       if (best(i) != Double.NegativeInfinity) {
-        // piece edges
-        var len = 1
-        val lim = math.min(maxPieceLen, n - i)
-        while (len <= lim) {
-          idOf.get(s.substring(i, i + len)) match {
-            case Some(id) if pieces(id).pieceType == TypeNormal ||
-                pieces(id).pieceType == TypeUserDefined =>
-              val sc = best(i) + pieces(id).score
-              if (sc > best(i + len)) {
-                best(i + len) = sc
-                backPiece(i + len) = id
-                backFrom(i + len) = i
-              }
-            case _ => ()
+        // piece edges, shortest first: walk the trie from position i
+        // until the prefix leaves it
+        var node = 0
+        var j = i
+        while (j < n && { node = t.child(node, s.charAt(j)); node > 0 }) {
+          j += 1
+          val id = t.pieceId(node)
+          if (id >= 0) {
+            val sc = best(i) + t.score(node)
+            if (sc > best(j)) {
+              best(j) = sc
+              backPiece(j) = id
+              backFrom(j) = i
+            }
           }
-          len += 1
         }
         // fallback edge over exactly one char (surrogate-pair aware)
         val clen = if (Character.isHighSurrogate(s.charAt(i)) &&
@@ -104,24 +102,32 @@ final class SentencePieceModel(
         val sc = best(i) + FallbackScore
         if (sc > best(i + clen)) {
           best(i + clen) = sc
-          backPiece(i + clen) = -2 // fallback marker
+          backPiece(i + clen) = FallbackEdge
           backFrom(i + clen) = i
         }
       }
       i += 1
     }
-    // walk back
-    val out = List.newBuilder[Int]
-    val rev = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+    // walk back to collect the path's edge ends, then emit forward: a
+    // piece edge is its id, a fallback edge its UTF-8 byte pieces (at
+    // most 4 per edge) or the UNK id
+    val ends = new Array[Int](n)
+    var k = 0
     var pos = n
-    while (pos > 0) {
-      val from = backFrom(pos)
-      if (backPiece(pos) == -2) rev += fallbackIds(s.substring(from, pos))
-      else rev += Seq(backPiece(pos))
-      pos = from
+    while (pos > 0) { ends(k) = pos; k += 1; pos = backFrom(pos) }
+    val out = new Array[Int](4 * k)
+    var m = 0
+    var from = 0
+    while (k > 0) {
+      k -= 1
+      val to = ends(k)
+      if (backPiece(to) != FallbackEdge) { out(m) = backPiece(to); m += 1 }
+      else if (byteFallback) m = utf8ByteIds(s, from, to, bytes, out, m)
+      else { out(m) = unkId; m += 1 }
+      from = to
     }
-    rev.reverseIterator.foreach(out ++= _)
-    out.result().toIndexedSeq
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      java.util.Arrays.copyOf(out, m))
   }
 
   /** inverse of encode for round-trip checks: pieces joined, ▁ → space,
@@ -164,6 +170,99 @@ object SentencePieceModel {
     * so covered text always prefers pieces (sentencepiece uses the unk
     * penalty similarly). */
   val FallbackScore: Double = -1e3
+
+  /** back-pointer marker of a fallback edge */
+  private val FallbackEdge = -2
+
+  /** Char trie of the piece spellings, its edges one open-addressing
+    * table of (node, char) → child; node 0 is the root. `pieceId(node)`
+    * is the id the spelling resolves to — the last piece spelled so, as
+    * a spelling → id map keeps it — when that piece is a Normal or
+    * UserDefined edge, else -1; `score(node)` is its score. */
+  private final class PieceTrie(pieces: Vector[Piece]) {
+    // nodes = root + distinct non-empty prefixes: over sorted spellings
+    // each one adds what it does not share with its predecessor
+    private val nodes = {
+      var count = 1
+      var prev = ""
+      pieces.iterator.map(_.piece).toArray.distinct.sorted.foreach { p =>
+        var l = 0
+        while (l < p.length && l < prev.length &&
+          p.charAt(l) == prev.charAt(l)) l += 1
+        count += p.length - l
+        prev = p
+      }
+      count
+    }
+    private val bits = 33 - Integer.numberOfLeadingZeros(nodes) // ≤ ½ full
+    private val keys = Array.fill(1 << bits)(-1L)
+    private val children = new Array[Int](1 << bits)
+    val pieceId: Array[Int] = Array.fill(nodes)(-1)
+    val score: Array[Float] = new Array[Float](nodes)
+
+    private def slot(key: Long): Int = {
+      var h = ((key * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+      while (keys(h) != key && keys(h) != -1L) h = (h + 1) & (keys.length - 1)
+      h
+    }
+
+    /** the child of `node` along `c`, or -1 */
+    def child(node: Int, c: Char): Int = {
+      val h = slot((node.toLong << 16) | c)
+      if (keys(h) == -1L) -1 else children(h)
+    }
+
+    locally {
+      var next = 1
+      pieces.iterator.zipWithIndex.foreach { case (p, id) =>
+        var node = 0
+        p.piece.foreach { c =>
+          val key = (node.toLong << 16) | c
+          val h = slot(key)
+          if (keys(h) == -1L) { keys(h) = key; children(h) = next; next += 1 }
+          node = children(h)
+        }
+        pieceId(node) =
+          if (p.pieceType == TypeNormal || p.pieceType == TypeUserDefined) id
+          else -1
+        score(node) = p.score
+      }
+    }
+  }
+
+  /** Writes the byte-piece ids of `s.substring(from, to).getBytes(UTF_8)`
+    * into `out` from `m`, without building either, and returns the new
+    * end. As in `getBytes`, a lone surrogate encodes as '?'. */
+  private def utf8ByteIds(s: String, from: Int, to: Int,
+      byteIds: Array[Int], out: Array[Int], m0: Int): Int = {
+    var m = m0
+    var i = from
+    while (i < to) {
+      val c = s.charAt(i)
+      val cp =
+        if (Character.isHighSurrogate(c) && i + 1 < to &&
+          Character.isLowSurrogate(s.charAt(i + 1))) {
+          i += 1
+          Character.toCodePoint(c, s.charAt(i))
+        } else if (Character.isSurrogate(c)) '?'.toInt
+        else c.toInt
+      i += 1
+      if (cp < 0x80) { out(m) = byteIds(cp); m += 1 }
+      else {
+        val len = if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4
+        val lead = if (len == 2) 0xc0 else if (len == 3) 0xe0 else 0xf0
+        out(m) = byteIds(lead | (cp >> (6 * (len - 1))))
+        m += 1
+        var k = len - 2
+        while (k >= 0) {
+          out(m) = byteIds(0x80 | ((cp >> (6 * k)) & 0x3f))
+          m += 1
+          k -= 1
+        }
+      }
+    }
+    m
+  }
 
   final case class Piece(piece: String, score: Float, pieceType: Int)
 

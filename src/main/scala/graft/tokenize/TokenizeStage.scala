@@ -1,12 +1,13 @@
 package graft.tokenize
 
+import com.fasterxml.jackson.core.JsonFactory
 import graft.pack.Conversations
 import graft.pack.Conversations.Turn
 import graft.wds.{Codecs, Sample, TarIO, WdsWriter}
+import java.io.StringWriter
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
-import org.json4s.JsonDSL._
 
 /** E2 — the tokenize stage (`tokenize/main.py:149-217`): pack shards →
   * tokenized, greedily ≤8000-token-packed shards.
@@ -206,20 +207,37 @@ object TokenizeStage {
     }
   }
 
+  private val jsonFactory = new JsonFactory
+
   /** Serialize a Packed to the tokenized-shard sample group:
-    * `<key>.json` + `<key>-<i>.jpg` (`main.py:73-85`). */
+    * `<key>.json` + `<key>-<i>.jpg` (`main.py:73-85`). The json is
+    * streamed through one Jackson generator over a Writer — json4s's
+    * `compact` takes the same path, so key order, escaping and (via
+    * [[TarIO.utf8]]) lone-surrogate bytes are unchanged — with no AST
+    * node or BigInt per id. */
   def toSampleGroup(p: Packed, url: String = ""): Sample = {
-    val json: JValue =
-      ("image" -> p.image) ~
-        ("input_ids" -> p.inputIds) ~
-        ("loss_mask" -> p.lossMask) ~
-        ("text" -> p.text)
+    val w = new StringWriter(64 + 8 * p.inputIds.length +
+      p.text.iterator.map(_.length).sum)
+    val g = jsonFactory.createGenerator(w)
+    g.writeStartObject()
+    g.writeArrayFieldStart("image")
+    p.image.foreach(g.writeString)
+    g.writeEndArray()
+    g.writeArrayFieldStart("input_ids")
+    p.inputIds.foreach(g.writeNumber(_: Int))
+    g.writeEndArray()
+    g.writeArrayFieldStart("loss_mask")
+    p.lossMask.foreach(g.writeNumber(_: Int))
+    g.writeEndArray()
+    g.writeArrayFieldStart("text")
+    p.text.foreach(g.writeString)
+    g.writeEndArray()
+    g.writeEndObject()
+    g.close()
     val frameEntries = p.images.zipWithIndex.map { case (b, i) =>
       s"$i.jpg" -> b
     }.toMap
-    Sample(p.key, url,
-      frameEntries + ("json" -> TarIO.utf8(
-        JsonMethods.compact(JsonMethods.render(json)))))
+    Sample(p.key, url, frameEntries + ("json" -> TarIO.utf8(w.toString)))
   }
 
   /** Physical write order for a packed sample (json first, then frames
