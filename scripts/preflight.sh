@@ -14,6 +14,14 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# one way to materialize: graft.Materialize (a reliable checkpoint).
+# localCheckpoint pins blocks in executor memory and loses them with
+# the executor, so production code must not call it.
+if grep -rn "localCheckpoint(" src/main; then
+  echo "[preflight] localCheckpoint( in src/main — use graft.Materialize"
+  exit 1
+fi
+
 echo "[preflight] sbt compile (main + test)..."
 sbt -batch "compile; Test/compile" >/tmp/preflight_compile.log 2>&1 || {
   echo "[preflight] COMPILE FAILED — tail of log:"

@@ -17,6 +17,8 @@ object GraftSession {
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a Materialize snapshot whose frame is dropped is deleted
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     cpus.foreach { n =>
       b.master(s"local[$n]").config("spark.sql.shuffle.partitions", n.toLong)
     }
@@ -26,9 +28,9 @@ object GraftSession {
     GraftExtensions.register(spark)
     // SparkContext applies `spark.checkpoint.dir` itself at start-up.
     // Without it a local session checkpoints to a temp dir, so
-    // iterative operators (connected components) always take their
-    // reliable, lineage-truncating path; a cluster must name a shared
-    // filesystem dir, and ConnectedComponents says so if it does not.
+    // Materialize and connected components always take their reliable,
+    // lineage-truncating path; a cluster must name a shared filesystem
+    // dir, and both say so if it does not.
     if (sc.getCheckpointDir.isEmpty && sc.isLocal)
       sc.setCheckpointDir(
         java.nio.file.Files.createTempDirectory("graft_ckpt").toString)

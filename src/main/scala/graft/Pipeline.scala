@@ -4,7 +4,7 @@ import graft.pack.{Loaders, PackStage}
 import graft.index.CheckStage
 import graft.tokenize.{SentencePieceModel, TokenizeStage, Tokenizers, SpecialTokenTokenizer}
 import graft.wds.WdsReader
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{avg, col, concat_ws, count, countDistinct, lit, sum, when}
 
 /** spark-submit entrypoint mirroring the reference's three CLI stages
@@ -504,55 +504,23 @@ object Pipeline {
         val corrupt = col("crc_bad") > 0 || col("junk_bytes") > 0 ||
           col("truncated_bytes") > 0 || col("config_changes") > 0 ||
           col("inconsistent") > 0 || col("parse_error") > 0
-        // --quarantine <path>: ALSO write one row per offending entry
-        // (shard url, tar member, kind, reason) so a corrupt shard is
-        // actionable — the row names the file to re-fetch/drop, not
-        // just a rate. The stat frame persists so the audit scan runs
-        // ONCE for both outputs (entry stats are counters, ~100 B/row
-        // — memory-cheap even when the scanned payloads are TBs).
-        val statDf = a.get("quarantine") match {
-          case Some(qPath) =>
-            val cached = stats.toDF().persist()
-            val reason = concat_ws(",",
-              when(col("parse_error") > 0, lit("parse_error")),
-              when(col("crc_bad") > 0, lit("crc_bad")),
-              when(col("junk_bytes") > 0, lit("junk_bytes")),
-              when(col("truncated_bytes") > 0, lit("truncated")),
-              when(col("config_changes") > 0, lit("config_changes")),
-              when(col("inconsistent") > 0, lit("xing_inconsistent")))
-            cached.where(corrupt)
-              .select(col("shard").as("url"), col("entry"), col("kind"),
-                reason.as("reason"))
-              .write.mode("overwrite").parquet(qPath)
-            cached
-          case None => stats.toDF()
-        }
-        val perShard = statDf.groupBy(col("shard"), col("kind"))
-          .agg(count(lit(1)).as("n_streams"),
-            sum(when(corrupt, 1L).otherwise(0L)).as("n_corrupt"),
-            sum(col("frames")).as("n_frames"),
-            sum(col("crc_checked")).as("crc_checked"),
-            sum(col("crc_bad")).as("crc_bad"),
-            sum(col("junk_bytes")).as("junk_bytes"),
-            sum(col("truncated_bytes")).as("truncated_bytes"),
-            sum(col("config_changes")).as("config_changes"),
-            sum(col("inconsistent")).as("inconsistent"),
-            sum(col("parse_error")).as("parse_errors"),
-            sum(col("dur_ms")).as("dur_ms"))
-          .withColumn("corrupt_ppm",
-            (col("n_corrupt") * lit(1000000L) / col("n_streams"))
-              .cast("long"))
-        perShard.write.mode("overwrite").parquet(req("save-path"))
-        if (a.contains("quarantine")) statDf.unpersist()
-        // bounded driver-side report row per kind, like the other stages
-        spark.read.parquet(req("save-path"))
-          .groupBy(col("kind"))
-          .agg(sum(col("n_streams")).as("n_streams"),
-            sum(col("n_corrupt")).as("n_corrupt"),
-            sum(col("crc_bad")).as("crc_bad"),
-            sum(col("truncated_bytes")).as("truncated_bytes"),
-            sum(col("dur_ms")).as("dur_ms"))
-          .orderBy(col("kind"))
+        auditOutputs(spark, stats.toDF(), corrupt,
+          reasons = Seq("parse_error" -> (col("parse_error") > 0),
+            "crc_bad" -> (col("crc_bad") > 0),
+            "junk_bytes" -> (col("junk_bytes") > 0),
+            "truncated" -> (col("truncated_bytes") > 0),
+            "config_changes" -> (col("config_changes") > 0),
+            "xing_inconsistent" -> (col("inconsistent") > 0)),
+          perShard = Seq("frames" -> "n_frames",
+            "crc_checked" -> "crc_checked", "crc_bad" -> "crc_bad",
+            "junk_bytes" -> "junk_bytes",
+            "truncated_bytes" -> "truncated_bytes",
+            "config_changes" -> "config_changes",
+            "inconsistent" -> "inconsistent",
+            "parse_error" -> "parse_errors", "dur_ms" -> "dur_ms"),
+          report = Seq("n_streams", "n_corrupt", "crc_bad",
+            "truncated_bytes", "dur_ms"),
+          savePath = req("save-path"), quarantine = a.get("quarantine"))
       // mixed video/image corruption-audit stage — the video/image
       // arms of audioaudit, same per-shard table + quarantine
       // contract, so one mixed corpus audits with two passes that
@@ -650,47 +618,64 @@ object Pipeline {
         // NOT corrupt (valid data behind a codec the engine triages)
         val corrupt = col("parse_error") > 0 ||
           col("truncated_samples") > 0 || col("decode_error") > 0
-        val statDf = a.get("quarantine") match {
-          case Some(qPath) =>
-            val cached = stats.toDF().persist()
-            val reason = concat_ws(",",
-              when(col("parse_error") > 0, lit("parse_error")),
-              when(col("truncated_samples") > 0, lit("truncated")),
-              when(col("decode_error") > 0, lit("decode_error")))
-            cached.where(corrupt)
-              .select(col("shard").as("url"), col("entry"), col("kind"),
-                reason.as("reason"))
-              .write.mode("overwrite").parquet(qPath)
-            cached
-          case None => stats.toDF()
-        }
-        val perShard = statDf.groupBy(col("shard"), col("kind"))
-          .agg(count(lit(1)).as("n_streams"),
-            sum(when(corrupt, 1L).otherwise(0L)).as("n_corrupt"),
-            sum(col("frames")).as("n_frames"),
-            sum(col("key_frames")).as("key_frames"),
-            sum(col("truncated_samples")).as("truncated_samples"),
-            sum(col("unsupported")).as("unsupported"),
-            sum(col("decode_error")).as("decode_errors"),
-            sum(col("parse_error")).as("parse_errors"),
-            sum(col("dur_ms")).as("dur_ms"))
-          .withColumn("corrupt_ppm",
-            (col("n_corrupt") * lit(1000000L) / col("n_streams"))
-              .cast("long"))
-        perShard.write.mode("overwrite").parquet(req("save-path"))
-        if (a.contains("quarantine")) statDf.unpersist()
-        // bounded driver-side report row per kind, like audioaudit
-        spark.read.parquet(req("save-path"))
-          .groupBy(col("kind"))
-          .agg(sum(col("n_streams")).as("n_streams"),
-            sum(col("n_corrupt")).as("n_corrupt"),
-            sum(col("n_frames")).as("n_frames"),
-            sum(col("unsupported")).as("unsupported"),
-            sum(col("dur_ms")).as("dur_ms"))
-          .orderBy(col("kind"))
+        auditOutputs(spark, stats.toDF(), corrupt,
+          reasons = Seq("parse_error" -> (col("parse_error") > 0),
+            "truncated" -> (col("truncated_samples") > 0),
+            "decode_error" -> (col("decode_error") > 0)),
+          perShard = Seq("frames" -> "n_frames",
+            "key_frames" -> "key_frames",
+            "truncated_samples" -> "truncated_samples",
+            "unsupported" -> "unsupported",
+            "decode_error" -> "decode_errors",
+            "parse_error" -> "parse_errors", "dur_ms" -> "dur_ms"),
+          report = Seq("n_streams", "n_corrupt", "n_frames",
+            "unsupported", "dur_ms"),
+          savePath = req("save-path"), quarantine = a.get("quarantine"))
       case other =>
         throw new IllegalArgumentException(s"unknown stage $other")
     }
+  }
+
+  /** The audit stages' shared outputs, from one entry-stat frame:
+    *  - `--quarantine <path>`: one row per corrupt entry (shard url,
+    *    tar member, kind, the comma-joined names of its true
+    *    `reasons`), so a corrupt shard is actionable — the row names
+    *    the file to re-fetch/drop, not just a rate;
+    *  - `savePath`: per (shard, kind), the stream and corrupt-stream
+    *    counts, each `perShard` (stat column → output name) sum, and
+    *    `corrupt_ppm`;
+    *  - returned: a bounded driver-side report, one row per kind,
+    *    summing `report`'s columns of the per-shard table.
+    * With a quarantine path the stat frame is persisted, so the audit
+    * scan runs ONCE for both writes (entry stats are counters,
+    * ~100 B/row — memory-cheap even when the scanned payloads are TBs),
+    * and released however the writes end. */
+  private def auditOutputs(spark: SparkSession, stats: DataFrame,
+      corrupt: Column, reasons: Seq[(String, Column)],
+      perShard: Seq[(String, String)], report: Seq[String],
+      savePath: String, quarantine: Option[String]): DataFrame = {
+    val statDf = if (quarantine.isDefined) stats.persist() else stats
+    try {
+      quarantine.foreach { qPath =>
+        statDf.where(corrupt)
+          .select(col("shard").as("url"), col("entry"), col("kind"),
+            concat_ws(",", reasons.map { case (name, c) =>
+              when(c, lit(name)) }: _*).as("reason"))
+          .write.mode("overwrite").parquet(qPath)
+      }
+      statDf.groupBy(col("shard"), col("kind"))
+        .agg(count(lit(1)).as("n_streams"),
+          sum(when(corrupt, 1L).otherwise(0L)).as("n_corrupt") +:
+            perShard.map { case (c, name) => sum(col(c)).as(name) }: _*)
+        .withColumn("corrupt_ppm",
+          (col("n_corrupt") * lit(1000000L) / col("n_streams"))
+            .cast("long"))
+        .write.mode("overwrite").parquet(savePath)
+    } finally if (quarantine.isDefined) statDf.unpersist(): Unit
+    val sums = report.map(c => sum(col(c)).as(c))
+    spark.read.parquet(savePath).groupBy(col("kind"))
+      .agg(sums.head, sums.tail: _*)
+      .orderBy(col("kind"))
   }
 
   /** One video/image entry's audit result, pre-aggregation

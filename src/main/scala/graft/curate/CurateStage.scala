@@ -58,11 +58,12 @@ import org.apache.spark.storage.StorageLevel
   *
   * `run` builds the funnel as one plan with one cache, the flag frame,
   * materialized by one action whose observed aggregate IS the stats
-  * frame. The opt-in near-dup and containment stages also persist
-  * their input, because their helpers run their own jobs over it; `run`
-  * releases those before returning, and the flag frame too when it
-  * fails. The returned frames are plain projections of the persisted
-  * flags — call [[CurateResult.close]] when done with them.
+  * frame; the flag frame is released when that action fails. The
+  * opt-in near-dup stage snapshots its input with
+  * [[graft.Materialize]] instead, because its verify and connected
+  * components run their own jobs over it. The returned frames are
+  * plain projections of the persisted flags — call
+  * [[CurateResult.close]] when done with them.
   */
 object CurateStage {
 
@@ -144,16 +145,10 @@ object CurateStage {
         "drop into clusters soft dedup re-weighted")
     require(opts.tokenBudgetDiv.isEmpty || docs.columns.contains("source"),
       "tokenBudgetDiv needs a `source` column on the input")
-    // every frame this run persists; all but the returned flag frame
-    // are released when `run` exits, and that one too when it throws
-    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def persisted(df: DataFrame): DataFrame = {
-      caches += df
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    val (flags, weightsOpt) = funnel(docs, opts)
+    val all = flags.withColumn("curated", col("budget_keep"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val (flags, weightsOpt) = funnel(docs, opts, persisted)
-      val all = persisted(flags.withColumn("curated", col("budget_keep")))
       // The one action: materialize the flag frame with the
       // audit-funnel aggregate observed on the same job, so the stats
       // cost no second pass over the flag table.
@@ -189,9 +184,11 @@ object CurateStage {
       val stats = docs.sparkSession.createDataFrame(
         java.util.List.of(Row.fromSeq(statNames.map(got(_)))),
         StructType(statNames.map(StructField(_, LongType))))
-      caches -= all // handed to the result: CurateResult.close releases it
       CurateResult(curated, stats, all)
-    } finally caches.foreach(_.unpersist(blocking = true)) // as in close()
+    } catch { case e: Throwable =>
+      all.unpersist(blocking = true) // as in close()
+      throw e
+    }
   }
 
   private val Keeps = Seq("quality_keep", "mix_keep", "exact_keep",
@@ -199,10 +196,9 @@ object CurateStage {
 
   /** The funnel's flag frame (input columns plus every `Keeps` flag, text
     * scrubbed when `spanScrub` is on) and, in soft mode, the per-doc
-    * `weight_ppm` frame. Unmaterialized; the opt-in stages whose helpers
-    * run their own jobs persist their input through `persisted`. */
-  private def funnel(docs: DataFrame, opts: CurateOptions,
-      persisted: DataFrame => DataFrame)
+    * `weight_ppm` frame. Unmaterialized; the opt-in stages snapshot
+    * what they read several times with [[graft.Materialize]]. */
+  private def funnel(docs: DataFrame, opts: CurateOptions)
       : (DataFrame, Option[DataFrame]) = {
     val withQ = docs.withColumn("quality_keep", qualityKeep(opts.minWords))
 
@@ -234,9 +230,9 @@ object CurateStage {
     // Runs over exact-dedup survivors: verbatim copies are already
     // gone, so LSH candidates here are genuine near-dups.
     val clustersOpt = opts.nearDupJaccard.map { tau =>
-      // persisted: ConnectedComponents runs its own jobs (one
-      // checkpoint write per round) over pairs and vertices of it
-      val s3 = persisted(withE.filter(col("exact_keep") === 1))
+      // the verify's signatures and shingles and the connected
+      // components' vertices each read it, in their own jobs
+      val s3 = graft.Materialize(withE.filter(col("exact_keep") === 1))
       val pairs = graft.queries.DedupQueries
         .jaccardFrom(s3.select(col("doc_id"), col("text")), tau,
           opts.lshBucketCap)
@@ -268,12 +264,12 @@ object CurateStage {
     // over near-dup survivors: a document near-CONTAINED in a larger
     // survivor (excerpt/quote) drops; maximal documents keep. Runs
     // after near-dup so cluster-resemblance is already resolved.
+    // Not materialized: containmentDropped reads its input once, into
+    // the shingle relation it materializes itself.
     val contK = opts.containmentTau.map { tau =>
-      // persisted: containmentDropped localCheckpoints a per-doc
-      // sketch of it (its own job) before the funnel's count reads it
-      val s3c = persisted(withN.filter(col("near_keep") === 1))
       graft.queries.DedupQueries.containmentDropped(
-        s3c.select(col("doc_id"), col("text")), tau,
+        withN.filter(col("near_keep") === 1)
+          .select(col("doc_id"), col("text")), tau,
         opts.containmentDfCeil)
         .select(col("doc_id"), lit(0).as("cont_keep"))
     }
@@ -292,9 +288,10 @@ object CurateStage {
       cc.filter(col("id") === col("label")).select(col("id").as("doc_id")))
     val spanDocs = repIds.fold(s3n.select(col("doc_id"), col("text")))(
       r => s3n.select(col("doc_id"), col("text")).join(r, Seq("doc_id")))
-    // not cached: the span filter counts gram document frequency in the
-    // same scan of the explode. The opt-in decontam and scrub stages
-    // explode again rather than hold the corpus-sized gram frame.
+    // not materialized: the span filter counts gram document frequency
+    // in the same scan of the explode. The opt-in decontam and scrub
+    // stages explode again; a snapshot shared by all three measured
+    // slower on qc07/qc10, since its own job reruns the spine.
     val sh = graft.functions.ShingleHash.exploded(spanDocs, opts.gramK)
     val spanKRep = graft.queries.CurationQueries.dupSpansFrom(sh)
       .select(col("doc_id"),

@@ -101,12 +101,12 @@ object ConnectedComponents {
     require(ckptDir.isDefined, "ConnectedComponents needs a reliable " +
       "checkpoint dir: set spark.checkpoint.dir")
     // Reliable path: snapshot each round to ALTERNATING parquet dirs
-    // under the checkpoint dir. df.checkpoint() would also be reliable
-    // but leaves every superseded round's snapshot on the FS for the
-    // application's lifetime (cleanCheckpoints defaults to false) — a
-    // long job would hold one full vertex-label copy PER ROUND. Two
-    // slots bound retained storage at O(1) snapshots; the final slot
-    // stays readable for the returned DataFrame.
+    // under the checkpoint dir. graft.Materialize would also be
+    // reliable, but its snapshots are deleted only when the context
+    // cleaner sees their RDD garbage-collected — a long job could hold
+    // one full vertex-label copy PER ROUND until then. Two slots bound
+    // retained storage at O(1) snapshots; the final slot stays
+    // readable for the returned DataFrame.
     val runDir = s"${ckptDir.get}/cc-${java.util.UUID.randomUUID()}"
     var slot = 0
     // Checkpoint df and return (reread frame projected to `keep`,

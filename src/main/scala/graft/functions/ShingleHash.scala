@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
 /** Exploded distinct word-n-gram hash kernel for the curation suite
-  * (qd11 decontamination, qd12 duplicated-span mining).
+  * (qd11 decontamination, qd12 duplicated-span mining) and the dedup
+  * verifies' shingle relation (Jaccard and containment).
   *
   * The declarative form — `explode(array_distinct(transform(shingles,
   * substring(md5(...)))))` — evaluates the md5 inside a Catalyst

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.wds.Sample
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -62,28 +62,30 @@ object CheckStage {
   }
 
   /** Shard index `{url, nsamples}` (`check_pair.py:46`); throws if any
-    * invariant fails — the stage IS the correctness gate. */
+    * invariant fails — the stage IS the correctness gate. One aggregate
+    * per tar carries both the sample count and the violation count, so
+    * the gate and the index share one scan. The index is one row per
+    * tar — driver-sized by construction (the reference collects and
+    * pickles it, `check_pair.py:59-66`) — so it is collected in url
+    * order and returned as a LocalRelation: nothing stays cached after
+    * the call. */
   def index(shards: Dataset[Sample], strict: Boolean = true): DataFrame = {
-    val c = checked(shards).cache()
-    try {
-      if (strict) {
-        val bad = c.filter(
-          col("bad_parse") || col("bad_mask_len") || col("bad_token_len") ||
-            col("bad_start_end") || col("bad_patch_count"))
-        val n = bad.count()
-        require(n == 0, s"$n samples violate tokenized-shard invariants")
-      }
-      // the index is one row per tar — driver-sized by construction
-      // (the reference collects and pickles it, `check_pair.py:59-66`).
-      // Collect into a LocalRelation so no cached block outlives this
-      // call: a session running many gate/bench invocations must not
-      // accumulate storage for the JVM lifetime.
-      val agg = c.groupBy(col("url")).agg(count(lit(1)).as("nsamples"))
-        .orderBy(col("url"))
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      agg.collect().foreach(r => { rows.add(r); () })
-      shards.sparkSession.createDataFrame(rows, agg.schema)
-    } finally { c.unpersist(); () }
+    val anyBad = col("bad_parse") || col("bad_mask_len") ||
+      col("bad_token_len") || col("bad_start_end") || col("bad_patch_count")
+    val agg = checked(shards).groupBy(col("url")).agg(
+      count(lit(1)).as("nsamples"),
+      sum(when(anyBad, 1L).otherwise(0L)).as("n_bad"))
+    // one task sorts the per-tar rows after the aggregate's exchange:
+    // Spark's own url order, with no range-partitioning exchange
+    val rows = agg.coalesce(1).sortWithinPartitions(col("url")).collect()
+    if (strict) {
+      val n = rows.map(_.getLong(2)).sum
+      require(n == 0, s"$n samples violate tokenized-shard invariants")
+    }
+    val index = new java.util.ArrayList[Row]()
+    rows.foreach(r => index.add(Row(r.getString(0), r.getLong(1))): Unit)
+    shards.sparkSession.createDataFrame(index,
+      StructType(agg.schema.fields.take(2)))
   }
 
   /** Write the index in the REFERENCE's artifact format: one pickle of

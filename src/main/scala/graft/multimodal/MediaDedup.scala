@@ -136,22 +136,17 @@ object MediaDedup {
   def compactVerdicts(verdicts: DataFrame, staged: DataFrame,
       thresholdPpm: Long = 400000L): DataFrame = {
     // Candidate (item, owner) pairs are few — one per foreign shingle
-    // bucket — but r17's owner prefilter referenced them unpersisted,
-    // duplicating the verdict-distinct subtree into the plan (the
-    // qd26-class defect). localCheckpoint: the derivation executes
-    // once; both prefilters, and the verify join, read the
-    // materialized pairs (size-known, so AQE broadcasts the key sets).
-    val cand = verdicts
+    // bucket — and both prefilters and the verify join read them:
+    // materialized, so the verdict-distinct subtree runs once.
+    val cand = graft.Materialize(verdicts
       .where(col("media_id") =!= col("owner_id") ||
         col("take") =!= col("owner_take"))
       .select(col("media_id"), col("take"),
         col("owner_id"), col("owner_take"))
-      .distinct()
-      .localCheckpoint()
-    // guide §3.2, BOTH sides (r17 did the owner side only; the item
-    // side still shuffled the whole staged relation although only
-    // candidate items can match). Result-identical: a semi join only
-    // removes rows with no partner.
+      .distinct())
+    // guide §3.2, BOTH sides: only candidate items and owners can
+    // match. Result-identical: a semi join only removes rows with no
+    // partner.
     val itemKeys = cand.select(col("media_id"), col("take")).distinct()
     val a = staged.join(itemKeys, Seq("media_id", "take"), "left_semi")
       .select(col("media_id"), col("take"), col("sh"),

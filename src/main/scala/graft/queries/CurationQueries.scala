@@ -74,32 +74,11 @@ object CurationQueries extends QueryRegistry {
        |      FROM documents) w""".stripMargin
   }
 
-  /** Exploded (doc_id, sh) via the single-pass JVM kernel, persisted
-    * and memoized per (session, sf dir): qd11 and qd12 each traverse
-    * the frame twice (eval/train split; df-agg + join-back), and
-    * without a persist each traversal re-scans and re-hashes the whole
-    * corpus. Bounded: one cached frame per fixture dir per session
-    * (MEMORY_AND_DISK, spills). At 100 TB the same two-pass reuse is a
-    * reliable checkpoint rather than a cache — plan shape unchanged. */
-  // WeakHashMap on the session: a stopped session's entries become
-  // collectable (no leak across stop/start cycles), and distinct live
-  // sessions can never collide the way a hash-derived key could
-  private val explodedCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-  private def exploded(s: SparkSession, dir: String): DataFrame = {
-    val perSession = explodedCache.synchronized {
-      var m = explodedCache.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        explodedCache.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(dir, _ =>
-      graft.functions.ShingleHash.exploded(
-        Tables(s, dir).documents.select(col("doc_id"), col("text")), GramK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  /** Exploded (doc_id, sh) of the fixture's documents via the
+    * single-pass JVM kernel. */
+  private def exploded(s: SparkSession, dir: String): DataFrame =
+    graft.functions.ShingleHash.exploded(
+      Tables(s, dir).documents.select(col("doc_id"), col("text")), GramK)
 
   /** Core of qd11 over any exploded (doc_id, sh) frame. */
   private def decontamFrom(sh: DataFrame): DataFrame = {
@@ -118,9 +97,10 @@ object CurationQueries extends QueryRegistry {
 
   /** qd11: per-train-document contamination counts against the eval
     * slice. Output covers every train doc (hits are sparse) so the gate
-    * hashes the negatives too. */
+    * hashes the negatives too. The eval and train sides both read the
+    * explode, so it is materialized once per call. */
   private def decontam(s: SparkSession, dir: String): DataFrame =
-    decontamFrom(exploded(s, dir))
+    decontamFrom(graft.Materialize(exploded(s, dir)))
 
   private val decontamSql =
     s"""WITH s AS ($shingleHashesSqlCte),
@@ -158,7 +138,8 @@ object CurationQueries extends QueryRegistry {
 
   /** qd12: per-document duplicated-span fraction — shingle document
     * frequency (a window over the 16-hex gram hashes), then one
-    * aggregate on doc_id. */
+    * aggregate on doc_id. That is one read of the explode, so it is
+    * not materialized. */
   private def dupSpans(s: SparkSession, dir: String): DataFrame =
     dupSpansFrom(exploded(s, dir))
 
@@ -216,9 +197,8 @@ object CurationQueries extends QueryRegistry {
   /** qd21: duplicated-span SCRUB — the removal operator for the signal
     * qd12 measures. Production positional grams come from the
     * [[graft.functions.ShingleHash.positional]] kernel (one narrow
-    * pass, like [[exploded]]); the dup set reuses the memoized
-    * distinct frame, so the corpus is shingled once for qd11/qd12/qd21
-    * together. */
+    * pass, like [[exploded]]); the dup set is the gram df of the
+    * distinct explode. */
   private def spanScrub(s: SparkSession, dir: String): DataFrame = {
     val dup = gramDfFrom(exploded(s, dir))
       .filter(col("df") >= 2).select(col("sh"))
@@ -797,7 +777,7 @@ object CurationQueries extends QueryRegistry {
     val src = s.readStream.schema(docsSchema).parquet(stage)
       .select(col("doc_id"), col("text"))
     val sh = graft.functions.ShingleHash.exploded(src, GramK)
-    // static side: the memoized batch gram frame (tiny, broadcast)
+    // static side: the batch eval gram set (tiny, broadcast)
     val evalGrams = exploded(s, dir)
       .filter(col("doc_id") % EvalMod === 0)
       .select(col("sh")).distinct()

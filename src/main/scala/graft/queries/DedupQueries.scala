@@ -31,14 +31,6 @@ object DedupQueries extends QueryRegistry {
 
   private def words(c: Column): Column = split(lower(c), " ")
 
-  /** 3-word shingles via 1-based element_at; guarded for short docs. */
-  private def shingles(ws: Column): Column =
-    when(size(ws) >= 3,
-      transform(sequence(lit(1), size(ws) - 2), i =>
-        concat_ws(" ", element_at(ws, i), element_at(ws, i + 1),
-          element_at(ws, i + 2))))
-      .otherwise(array(concat_ws(" ", ws)))
-
   /** doc_id + h0..h7 signature frame — the shared prefix of the
     * minhash/LSH/jaccard queries. Computed by the single-pass JVM kernel
     * ([[graft.functions.MinHash]]); MinHashSpec asserts it equals the
@@ -215,13 +207,12 @@ object DedupQueries extends QueryRegistry {
     // budgetDiv posture)
     require(cap > 0, s"lsh bucket cap must be positive, got $cap")
     // the exploded band relation feeds the hot-bucket aggregate and
-    // BOTH sides of the candidate self-join; memoized like qd26's
-    // shingle relation so the minhash+band-md5 pipeline runs once
-    val bands = cachedRelation(sigIn, s"bands") {
+    // BOTH sides of the candidate self-join: materialized, so the
+    // minhash+band-md5 pipeline runs once per call
+    val bands = graft.Materialize(
       sigIn.select($"doc_id" +: bandColsFor(NumBands, BandSize): _*)
         .select($"doc_id", explode(array(
-          (0 until NumBands).map(b => col(s"band$b")): _*)).as("band"))
-    }
+          (0 until NumBands).map(b => col(s"band$b")): _*)).as("band")))
     val hot = bands.groupBy($"band").agg(count(lit(1)).as("m"))
       .filter($"m" > cap).select($"band")
     val kept = bands.join(hot, Seq("band"), "left_anti")
@@ -282,13 +273,10 @@ object DedupQueries extends QueryRegistry {
     * 30–60 bytes) and distinct counts — hence shared/jaccard values —
     * are hash-invariant, so every raw-shingle oracle stays valid
     * unchanged (a 64-bit collision could only ADD a shared count,
-    * the same accepted posture as the band hashes and qd22's sketch).
-    * The relation is the SAME one the containment family stages, so
-    * qd04, the curate near-dup stage, and qd22/qd24/qd26 all reuse
-    * one bounded-memoized corpus explode per input frame. */
+    * the same accepted posture as the band hashes and qd22's sketch). */
   private def shingleFrames(docs: DataFrame): (DataFrame, DataFrame) = {
     import docs.sparkSession.implicits._
-    val sh = cachedShingleRelation(docs)
+    val sh = shingleRelation(docs)
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
     (sh, sizes)
   }
@@ -308,18 +296,12 @@ object DedupQueries extends QueryRegistry {
       tau: Double): DataFrame = {
     val s = cand0.sparkSession
     import s.implicits._
-    // guide §3.2: semi-filter BOTH sides of the shared-count join —
-    // every corpus row used to shuffle into the (doc_id, sh) join
-    // although only docs appearing in some candidate pair can match,
-    // and candidates are sparse (LSH-selected). r17 prefiltered the
-    // b-side only, and its semi referenced the unpersisted `cand`,
-    // duplicating the whole LSH candidate derivation (band explode +
-    // self-join + distinct) into the plan. r18: localCheckpoint the
-    // pair set — the derivation executes once, the prefilter extends
-    // to the a-side, and the distinct-id frames are size-known so AQE
-    // broadcasts them. Result-identical: a semi join only removes
-    // rows with no partner.
-    val cand = cand0.localCheckpoint()
+    // guide §3.2: semi-filter BOTH sides of the shared-count join to
+    // candidate ids — candidates are sparse (LSH-selected), the corpus
+    // explode is not. The pair set feeds both prefilters and the join,
+    // so it is materialized: the LSH derivation runs once. Result-
+    // identical: a semi join only removes rows with no partner.
+    val cand = graft.Materialize(cand0)
     val shA = sh.join(cand.select($"a_id").distinct(),
       sh("doc_id") === col("a_id"), "left_semi")
     val shB = sh.join(cand.select($"b_id").distinct(),
@@ -370,14 +352,17 @@ object DedupQueries extends QueryRegistry {
   private val BottomK = 4
   private val ContainTau = 0.6
 
-  /** Hashed distinct-shingle projection (16-hex md5 of each 3-gram) —
-    * the qd22 relation: only hashes and ids ever reach its joins. Wire
-    * width = [[graft.functions.ShingleHash.HashHexChars]] (collision
-    * posture quantified in SCALE.md). */
-  private def hashedShingles(ws: Column): Column =
-    array_distinct(transform(shingles(ws), x =>
-      substring(md5(to_binary(x, lit("utf-8"))), 1,
-        graft.functions.ShingleHash.HashHexChars)))
+  /** The (doc_id, sh) relation of `docs`: each doc's distinct 3-word
+    * shingles as 16-hex md5 prefixes, from the JVM kernel
+    * [[graft.functions.ShingleHash.exploded]]; a null text hashes as
+    * the empty gram. Only hashes and ids reach its joins; wire width and collision posture are in
+    * ShingleHash and SCALE.md. Materialized: the containment and
+    * Jaccard verifies read it from several consumers, and each call
+    * explodes the corpus once. */
+  private def shingleRelation(docs: DataFrame): DataFrame =
+    graft.Materialize(graft.functions.ShingleHash.exploded(
+      docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("text")),
+      3))
 
   /** qd22 core over any (doc_id, text) frame: bottom-k containment
     * dedup — the near-SUBSET complement of qd04. Jaccard punishes size
@@ -409,168 +394,30 @@ object DedupQueries extends QueryRegistry {
     * loss is a pair whose every bottom-k witness is corpus-hot, which
     * by the ceiling's premise was not subset evidence. qd22 gates the
     * pure form, qd26 the capped production form. */
-  /** Bounded LRU (4 sessions × 4 relations) of persisted exploded
-    * shingle relations. The outer level keys on sessionUUID and is
-    * itself LRU-evicting: a WeakHashMap on the session would never
-    * collect (each cached DataFrame strongly references its session
-    * through queryExecution — the classic value-refers-to-key trap),
-    * so stale sessions are bounded by eviction instead — at most 4
-    * recent sessions' entries are retained, each at most 4 relations —
-    * and eviction unpersists best-effort (a stopped session's blocks
-    * died with its block manager; the try only guards the call). */
-  private val shCache = new java.util.LinkedHashMap[
-      org.apache.spark.sql.SparkSession,
-      java.util.LinkedHashMap[String, DataFrame]](8, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        org.apache.spark.sql.SparkSession,
-        java.util.LinkedHashMap[String, DataFrame]]): Boolean = {
-      val evict = size() > 4
-      if (evict) e.getValue.values().forEach { df =>
-        try df.unpersist(): Unit catch { case _: Exception => }
-      }
-      evict
-    }
-  }
-
-  /** Memoize-and-persist `build` keyed by (`tag`, leaf source paths,
-    * canonical plan of `owner`).
-    *
-    * Two traps shape the key, both confirmed empirically:
-    *  - a LocalRelation's canonical string does NOT include its data,
-    *    so two in-memory frames with the same schema would collide —
-    *    cache only plans whose every leaf is file-backed; in-memory
-    *    inputs (specs, ad-hoc frames) get the unpersisted form
-    *    (recomputing a small local relation per consumer is cheaper
-    *    than a wrong cache hit);
-    *  - canonicalization ALSO normalizes file paths and column names
-    *    away (`Relation [none#0,none#1] parquet` for any two-column
-    *    parquet), so the leaves' root paths are folded into the key
-    *    explicitly — without them, two different corpora with the
-    *    same plan shape would share one relation.
-    *
-    * Staleness: the key also folds in an md5 of the CONCRETE input
-    * file list (`owner.inputFiles`) PLUS each file's length and
-    * modification time, read from the relation's own FileIndex (the
-    * listing Spark already holds in memory — no extra namenode RPCs
-    * at lake scale). Spark job output files carry unique per-write
-    * names (part-<uuid>), so a normal overwrite changes the names;
-    * an in-place mutation that REUSES file names (a manual copy, a
-    * non-Spark writer) changes mtime/length instead — and once the
-    * fresh statuses are visible, the snapshot moves → cache miss →
-    * fresh build, instead of silently serving the pre-overwrite
-    * relation. CAVEAT, stated precisely: the statuses come from
-    * Spark's own session-lifetime FileStatusCache, so an external
-    * same-name mutation is only observed after
-    * `spark.catalog.refreshByPath` (or a new session) — the snapshot
-    * key cannot see THROUGH a listing cache upstream of it (the
-    * CorpusOpsSpec staleness test refreshes first for exactly this
-    * reason). A caller holding the pre-overwrite DataFrame OBJECT
-    * likewise sees the old FileIndex, and a writer that also preserves
-    * mtime+length is not detected. */
-  private def cachedRelation(owner: DataFrame, tag: String)(
-      build: => DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{
-      HadoopFsRelation, LogicalRelation}
-    val leaves = owner.queryExecution.analyzed.collectLeaves()
-    val fileBacked = leaves.forall {
-      case _: LogicalRelation => true
-      case l => l.getClass.getSimpleName.startsWith("DataSourceV2")
-    }
-    if (!fileBacked) return build
-    val leafIds = leaves.map {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => h.location.rootPaths.mkString(",")
-        case o => o.toString
-      }
-      case l => l.toString // v2: table identifier survives toString
-    }.mkString(";")
-    // md5, not the raw join: a 100k-file corpus would otherwise put a
-    // multi-MB string in every cache key
-    val snapshot = {
-      // per-file length+mtime from the leaves' FileIndexes (in-memory
-      // listing); leaves without one contribute name-only entries via
-      // inputFiles below
-      val statuses = leaves.flatMap {
-        case lr: LogicalRelation => lr.relation match {
-          case h: HadoopFsRelation =>
-            h.location.listFiles(Nil, Nil).flatMap(_.files).map(f =>
-              s"${f.getPath}#${f.getLen}#${f.getModificationTime}")
-          case _ => Nil
-        }
-        case _ => Nil
-      }
-      val files =
-        (owner.inputFiles.toSeq ++ statuses).sorted.mkString("\n")
-      val d = java.security.MessageDigest.getInstance("MD5")
-      d.digest(files.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    val key = tag + "|" + leafIds + "|" + snapshot + "|" +
-      owner.queryExecution.analyzed.canonicalized.toString
-    shCache.synchronized {
-      var m = shCache.get(owner.sparkSession)
-      if (m == null) {
-        m = new java.util.LinkedHashMap[String, DataFrame](8, 0.75f, true) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[String, DataFrame]): Boolean = {
-            val evict = size() > 4
-            if (evict) e.getValue.unpersist(): Unit
-            evict
-          }
-        }
-        shCache.put(owner.sparkSession, m): Unit
-      }
-      var df = m.get(key)
-      if (df == null) {
-        df = build
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        m.put(key, df): Unit
-      }
-      df
-    }
-  }
-
-  /** The memoized (doc_id, shingle-hash) relation the containment
-    * query's five consumers share. */
-  private def cachedShingleRelation(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    cachedRelation(docs, "sh")(docs.select($"doc_id",
-      explode(hashedShingles(words($"text"))).as("sh")))
-  }
-
   private[graft] def containmentFrom(
       docs: DataFrame, tau: Double = ContainTau,
-      sketchDfCeil: Option[Int] = None): DataFrame = {
+      sketchDfCeil: Option[Int] = None): DataFrame =
+    containmentPairs(docs, tau, sketchDfCeil)._1.drop("a_n", "b_n")
+
+  /** qd22's pairs, also carrying both sides' distinct-shingle counts
+    * (`a_n`, `b_n`), and the per-doc (doc_id, n_sh) sizes they came
+    * from — the containment policy (qd24) reads both. */
+  private def containmentPairs(
+      docs: DataFrame, tau: Double,
+      sketchDfCeil: Option[Int]): (DataFrame, DataFrame) = {
     import docs.sparkSession.implicits._
-    // The exploded (doc_id, shingle-hash) relation feeds five
-    // downstream consumers (sizes, hot, candidate join, both sides of
-    // the shared count); persist it so the md5-shingle explode runs
-    // once per scan instead of five times. At cluster scale this is
-    // the stage you'd write to parquet once (MediaDedup posture); the
-    // executor cache is the local[32] analog. Memoized per (session,
-    // canonical input plan) with LRU eviction so repeated calls over
-    // the same frame (bench reps, qd22/qd24/qd26 sharing one fixture)
-    // reuse one cached relation instead of pinning a fresh copy each
-    // — a lazily-returned result can't unpersist behind itself, so
-    // bounding the cache is the leak control.
-    val sh = cachedShingleRelation(docs)
-    // hashedShingles is array_distinct, so the bottom-k sketch is
+    // five consumers (sizes, hot, candidate join, both sides of the
+    // shared count) read the one explode
+    val sh = shingleRelation(docs)
+    // the explode is distinct per doc, so the bottom-k sketch is
     // derivable from sh itself (no second decode pass): per-doc sort
-    // of the distinct hashes, keep the k smallest. r17 fused the
-    // sketch and the per-doc sizes into ONE aggregation — but left it
-    // unpersisted, and column pruning split its two consumers straight
-    // back into two independent groupBy(doc_id) passes (the committed
-    // qd26 after-plan showed partial_count and partial_collect_list as
-    // SEPARATE aggregates; partial-agg outputs differ, so ReuseExchange
-    // cannot dedupe them either). r18: localCheckpoint materializes
-    // the fused pass — one aggregation executes, once; sizes and the
-    // sketch both read the checkpointed (doc_id, n_sh, bks) rows. At
-    // corpus scale this is the small per-doc proxy table of guide §8
-    // (decide with small rows); eager, so independent AQE stages can
-    // never race to compute it twice.
-    val perDoc = sh.groupBy($"doc_id").agg(
+    // of the distinct hashes, keep the k smallest. Sizes and the sketch
+    // come from ONE aggregation, materialized: left lazy, column
+    // pruning would split its two consumers back into two
+    // groupBy(doc_id) passes that no exchange reuse can merge.
+    val perDoc = graft.Materialize(sh.groupBy($"doc_id").agg(
       count(lit(1)).as("n_sh"),
-      slice(sort_array(collect_list($"sh")), 1, BottomK).as("bks"))
-      .localCheckpoint()
+      slice(sort_array(collect_list($"sh")), 1, BottomK).as("bks")))
     val sizes = perDoc.select($"doc_id", $"n_sh")
     val bk0 = perDoc
       .select($"doc_id".as("bk_id"), explode($"bks").as("sh"))
@@ -580,25 +427,17 @@ object DedupQueries extends QueryRegistry {
       bk0.join(hot, Seq("sh"), "left_anti")
     }
     // Candidate pairs are small by construction (sketch-selected) but
-    // their derivation is not: r17's semi prefilter referenced the
-    // unpersisted `cand`, DUPLICATING the whole sketch-join subtree
-    // into the plan (qd26 went 24 -> 36 exchanges, +0.41 s at sf0.1,
-    // and a second full candidate derivation at scale). r18:
-    // localCheckpoint the pair set — the derivation executes once,
-    // every consumer (both semi prefilters, the shared-count join)
-    // reads the materialized rows, and the distinct-id frames built
-    // from it are size-known, so AQE broadcasts them.
-    val cand = bk.join(sh.as("o"), Seq("sh"))
+    // their derivation is not, and both semi prefilters and the
+    // shared-count join read them: materialized, so the sketch join
+    // runs once.
+    val cand = graft.Materialize(bk.join(sh.as("o"), Seq("sh"))
       .filter($"bk_id" =!= col("o.doc_id"))
       .select(least($"bk_id", col("o.doc_id")).as("a_id"),
         greatest($"bk_id", col("o.doc_id")).as("b_id"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // guide §3.2: semi-filter BOTH sides of the shared-count join to
     // candidate ids before the exchange — candidates are sketch-
-    // selected and sparse, the full corpus explode is not. r17 only
-    // prefiltered the b-side; the a-side join moved every corpus row
-    // into its exchange although only candidate a_ids can match.
+    // selected and sparse, the full corpus explode is not.
     // Result-identical: a semi join only removes rows with no partner.
     val shA = sh.join(cand.select($"a_id").distinct(),
       sh("doc_id") === col("a_id"), "left_semi")
@@ -610,15 +449,17 @@ object DedupQueries extends QueryRegistry {
         col("sa.sh") === col("sb.sh"))
       .groupBy($"a_id", $"b_id")
       .agg(count(lit(1)).as("shared"))
-    shared
+    val pairs = shared
       .join(sizes.as("na"), col("a_id") === col("na.doc_id"))
       .join(sizes.as("nb"), col("b_id") === col("nb.doc_id"))
       .select($"a_id", $"b_id", $"shared",
+        col("na.n_sh").as("a_n"), col("nb.n_sh").as("b_n"),
         round($"shared".cast("double") /
           least(col("na.n_sh"), col("nb.n_sh")), 6).as("containment"),
         round($"shared".cast("double") /
           (col("na.n_sh") + col("nb.n_sh") - $"shared"), 6).as("jaccard"))
       .filter($"containment" >= tau)
+    (pairs, sizes)
   }
 
   private def containment(s: SparkSession, dir: String): DataFrame =
@@ -719,28 +560,22 @@ object DedupQueries extends QueryRegistry {
     * qd24 gate and the curate funnel's `--containment` stage. */
   private[graft] def containmentDropped(
       docs: DataFrame, tau: Double = ContainTau,
-      sketchDfCeil: Option[Int] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val pairs = containmentFrom(docs, tau, sketchDfCeil)
-    // sizes derive from the same memoized relation containmentFrom
-    // stages — NOT a fresh explode (a second corpus pass per call)
-    val sizes = cachedShingleRelation(docs)
-      .groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
+      sketchDfCeil: Option[Int] = None): DataFrame =
+    droppedFrom(containmentPairs(docs, tau, sketchDfCeil)._1)
+
+  /** The contained side of each [[containmentPairs]] row, counted. */
+  private def droppedFrom(pairs: DataFrame): DataFrame =
     pairs
-      .join(sizes.select($"doc_id".as("a_id"), $"n_sh".as("a_n")), "a_id")
-      .join(sizes.select($"doc_id".as("b_id"), $"n_sh".as("b_n")), "b_id")
-      .select(when($"a_n" < $"b_n", $"a_id")
-        .when($"b_n" < $"a_n", $"b_id")
-        .otherwise(greatest($"a_id", $"b_id")).as("doc_id"))
-      .groupBy($"doc_id").agg(count(lit(1)).as("nc"))
-  }
+      .select(when(col("a_n") < col("b_n"), col("a_id"))
+        .when(col("b_n") < col("a_n"), col("b_id"))
+        .otherwise(greatest(col("a_id"), col("b_id"))).as("doc_id"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("nc"))
 
   private def containmentKeep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables(s, dir).documents
-    val sizes = cachedShingleRelation(docs)
-      .groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
-    sizes.join(containmentDropped(docs), Seq("doc_id"), "left")
+    val (pairs, sizes) =
+      containmentPairs(Tables(s, dir).documents, ContainTau, None)
+    sizes.join(droppedFrom(pairs), Seq("doc_id"), "left")
       .select($"doc_id", $"n_sh",
         coalesce($"nc", lit(0L)).as("n_containers"),
         when($"nc".isNull, 1).otherwise(0).as("kept"))

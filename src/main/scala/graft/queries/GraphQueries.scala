@@ -40,7 +40,7 @@ object GraphQueries extends QueryRegistry {
     * converge to (1-d) after one round). Returns (word→)node, score.
     *
     * Every `checkpointEvery` rounds the score frame is
-    * `localCheckpoint`ed: each iteration otherwise stacks two joins and
+    * [[graft.Materialize]]d: each iteration otherwise stacks two joins and
     * an aggregate onto the lineage, so analysis/optimization time grows
     * with the iteration count — invisible at the gate's 3 rounds, a
     * planner death spiral at a production 50+. Scores are one row per
@@ -63,7 +63,7 @@ object GraphQueries extends QueryRegistry {
           (lit(BasePpm) + expr(s"($DampPpm * coalesce(inflow, 0L)) div ${InitPpm}"))
             .as("score"))
       if (i % checkpointEvery == 0 && i < iters)
-        scores = scores.localCheckpoint()
+        scores = graft.Materialize(scores)
     }
     scores
   }

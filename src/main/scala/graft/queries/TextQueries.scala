@@ -737,7 +737,7 @@ object TextQueries extends QueryRegistry {
     * Scale hygiene, invisible at the gate's 6 merges but decisive at a
     * production 30k-merge train:
     *  - `checkpointEvery`: every K accepted merges the vocab frame is
-    *    `localCheckpoint`ed — each merge otherwise stacks one `replace`
+    *    [[graft.Materialize]]d — each merge otherwise stacks one `replace`
     *    projection onto the lineage, so plan analysis time grows
     *    linearly with merge count (and the pair-count subtree is
     *    re-analyzed every iteration). The vocab is Zipf-bounded (one
@@ -799,7 +799,7 @@ object TextQueries extends QueryRegistry {
         }
         sinceCkpt += accepted
         if (sinceCkpt >= checkpointEvery && it <= mergeCount) {
-          vocab = vocab.localCheckpoint()
+          vocab = graft.Materialize(vocab)
           sinceCkpt = 0
         }
       }
@@ -828,11 +828,10 @@ object TextQueries extends QueryRegistry {
 
   private def bpeMerges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = bpeVocabOf(Tables(s, dir).documents).cache()
-    base.count() // materialize once; iterations rebuild from cache
+    // every merge iteration rereads the vocab
+    val base = graft.Materialize(bpeVocabOf(Tables(s, dir).documents))
     // batchK = 1: the oracle unrolls STRICT sequential merges
     val merges = bpeTrain(base, BpeMergeCount, batchK = 1)
-    base.unpersist() // the cached plan, not the 6-times-derived frame
     s.createDataFrame(merges)
       .toDF("merge_rank", "left", "right", "pair_count")
       .orderBy($"merge_rank")

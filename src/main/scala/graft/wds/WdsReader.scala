@@ -31,24 +31,15 @@ object WdsReader {
       opts: TarIO.ReadOptions): Dataset[Sample] =
     readUrls(spark, ShardList.expand(spec), opts)
 
+  /** One shard per partition: tars are non-splittable and the scan is
+    * sequential; at cluster scale the scheduler packs shards onto
+    * executors — same granularity as the reference fleet. */
   def readUrls(
       spark: SparkSession,
       urls: Seq[String],
       opts: TarIO.ReadOptions = TarIO.ReadOptions()): Dataset[Sample] = {
-    implicit val enc = Encoders.product[Sample]
-    implicit val strEnc = Encoders.STRING
     require(urls.nonEmpty, "empty shard list")
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val bc = spark.sparkContext.broadcast(conf)
-    // one shard per partition: tars are non-splittable and the scan is
-    // sequential; at cluster scale the scheduler packs shards onto
-    // executors — same granularity as the reference fleet.
-    // parallelize(n items, n slices) slices contiguously — EXACTLY one
-    // shard per partition, in list order (round-robin repartition gave
-    // no such guarantee: partitions could receive 0 or 2 shards)
-    spark.createDataset(
-      spark.sparkContext.parallelize(urls, urls.size)
-        .mapPartitions(it => readPartition(it, bc.value.value, opts)))
+    readUrlGroups(spark, urls.map(Seq(_)), opts)
   }
 
   /** Explicit shard grouping: partition i streams exactly `groups(i)`'s
@@ -65,6 +56,9 @@ object WdsReader {
     require(groups.nonEmpty && groups.forall(_.nonEmpty), "empty group")
     val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val bc = spark.sparkContext.broadcast(conf)
+    // parallelize(n items, n slices) slices contiguously — EXACTLY one
+    // group per partition, in list order (round-robin repartition gave
+    // no such guarantee: partitions could receive 0 or 2 groups)
     spark.createDataset(
       spark.sparkContext.parallelize(groups, groups.size)
         .mapPartitions(it => it.flatMap(group =>
@@ -80,16 +74,9 @@ object WdsReader {
       urls: Seq[String],
       groupSize: Int,
       opts: TarIO.ReadOptions = TarIO.ReadOptions()): Dataset[Sample] = {
-    implicit val enc = Encoders.product[Sample]
     require(urls.nonEmpty, "empty shard list")
     require(groupSize >= 1, s"groupSize $groupSize")
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val bc = spark.sparkContext.broadcast(conf)
-    val groups = urls.grouped(groupSize).toSeq
-    spark.createDataset(
-      spark.sparkContext.parallelize(groups, groups.size)
-        .mapPartitions(it => it.flatMap(group =>
-          readPartition(group.iterator, bc.value.value, opts))))
+    readUrlGroups(spark, urls.grouped(groupSize).toSeq, opts)
   }
 
   /** Open one shard as a grouped-sample iterator plus its closer.

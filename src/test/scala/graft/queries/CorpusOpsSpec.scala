@@ -685,6 +685,27 @@ class CorpusOpsSpec extends SparkSpec {
       "same-name in-place overwrite served the stale shingle relation")
   }
 
+  test("jaccardFrom, containmentDropped, qd11 and qd12 pin no " +
+    "persistent RDD across calls") {
+    // a fresh file-backed corpus, so no earlier call in this JVM can
+    // have seen it: each call materializes what it reads several
+    // times and keeps nothing in the block manager afterwards
+    val dir = java.nio.file.Files.createTempDirectory("noleak").toString
+    graft.Tables(spark, sf).documents
+      .write.parquet(s"$dir/documents.parquet")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val docs = graft.Tables(spark, dir).documents.select("doc_id", "text")
+    def run(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    run(DedupQueries.jaccardFrom(docs))
+    run(DedupQueries.containmentDropped(docs))
+    run(graft.SparkEntry.queries("qd11_decontam")(spark, dir))
+    run(graft.SparkEntry.queries("qd12_dup_spans")(spark, dir))
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"calls left ${leaked.size} persistent RDDs")
+  }
+
   test("qd27: the bucket cap drops exactly the boilerplate bucket; " +
     "near-dups still pair through selective bands; generous cap is " +
     "a no-op") {

@@ -498,19 +498,21 @@ class PlanAuditSpec extends SparkSpec {
     "zero direct documents scans in the plan") {
     // the exploded (doc_id, shingle) relation feeds five consumers
     // (sizes, df ceiling, candidate join, both shared-count sides);
-    // the round-12 fix caches it once (15.0s -> 3.4s at sf0.1). A
-    // direct parquet scan of `documents` reappearing in this plan
-    // means a consumer fell off the cache and the explode runs again.
+    // it is materialized once per call (the round-12 cache took the
+    // row from 15.0s to 3.4s at sf0.1). A direct parquet scan of
+    // `documents` reappearing in this plan means a consumer fell off
+    // the snapshot and the explode runs again.
     val p = planOf("qd26_containment_capped")
     val docScans = scans(p).filter(
       _.relation.location.rootPaths.exists(_.toString.contains("documents")))
     assert(docScans.isEmpty,
-      s"${docScans.size} direct documents scan(s) — shingle cache bypassed")
-    val mem = p.collect {
-      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-        => m
+      s"${docScans.size} direct documents scan(s) — shingle snapshot bypassed")
+    val snaps = p.collect {
+      case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd
     }
-    assert(mem.nonEmpty, "expected InMemoryTableScan consumers")
+    assert(snaps.nonEmpty, "expected consumers of the materialized relation")
+    assert(snaps.forall(r => r.isCheckpointed && r.getCheckpointFile.isDefined),
+      "a consumer reads an RDD that is not a reliable snapshot")
   }
 
   test("qs12: the corpus-scale pool ranking shuffles (q_id, c_id, " +
