@@ -251,7 +251,11 @@ object Pipeline {
         // payload pruning keeps entry names so keys/grouping/sample
         // counts are identical. On seekable storage the index scan of
         // image-bearing tokenized shards then reads headers + json
-        // (a few % of shard bytes) instead of the whole corpus.
+        // (a few % of shard bytes) instead of the whole corpus, and
+        // each json entry is scanned once for its counts
+        // (PackedJsonStats) without building the id arrays. An entry
+        // that is not valid UTF-8 is a bad_parse violation: it fails
+        // the gate, and --lenient counts it in the index.
         val idx = CheckStage.index(
           WdsReader.read(spark, req("input"), graft.wds.TarIO.ReadOptions(
             payloadFiles = Some(_.endsWith(".json")))),

@@ -1,7 +1,8 @@
 package graft.index
 
+import graft.functions.PackedJsonStats
 import graft.wds.Sample
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,9 +10,16 @@ import org.apache.spark.sql.types._
   * shards, assert structural invariants, emit the `{url, nsamples}` shard
   * index and a human-inspection sample.
   *
-  * The invariants are expressed as DataFrame predicates over the parsed
-  * json column — fully declarative, so at 100 TB this is a single
-  * codegen'd scan + one tiny groupBy(url) hash aggregation (A1/A2).
+  * The gate is one streaming scan per bin: [[PackedJsonStats]] walks
+  * the json entry's bytes once inside whole-stage codegen and returns
+  * the five counts the invariants need, and the flags are DataFrame
+  * predicates over those counts. At 100 TB this stays a single codegen'd
+  * scan + one tiny groupBy(url) hash aggregation (A1/A2), with no id
+  * array ever built. Only the 1 % inspection dump, which prints the
+  * arrays, parses the entry with `from_json`. The gate and the dump
+  * parse separately; `PackedJsonStatsSpec` keeps them in agreement by
+  * checking every gate column against the same columns computed from
+  * the `from_json` arrays, row for row.
   */
 object CheckStage {
 
@@ -28,37 +36,35 @@ object CheckStage {
   val PatchesPerImage = 256
   val MaxTokens = 8000
 
-  /** entries → parsed json frame, shared by the gate and the
-    * inspection dump so the two can never parse differently. */
-  private def parsed(shards: Dataset[Sample]): DataFrame =
-    shards.toDF()
-      .withColumn("j", from_json(
-        decode(col("entries").getItem("json"), "UTF-8"), PackedJsonSchema))
-
-  /** Parse + flag each sample with its invariant violations
+  /** Flag each sample with its invariant violations
     * (`check_pair.py:37-40`). A missing or unparseable json entry is
     * its own violation (bad_parse): null flags would otherwise slip
-    * corrupt samples past the strict filter's three-valued OR. */
+    * corrupt samples past the strict filter's three-valued OR. Each
+    * column equals what `size`/`array_remove` over the `from_json`
+    * arrays gives, null arrays included. */
   def checked(shards: Dataset[Sample]): DataFrame = {
-    val df = parsed(shards)
-    // size(a) - size(array_remove(a, id)) stays inside codegen; the
-    // filter() HOF evaluates an interpreted lambda per element over
-    // up-to-8k-token arrays on the gate's hot path
-    def countId(id: Int) =
-      size(col("j.input_ids")) -
-        size(array_remove(col("j.input_ids"), id))
-    val bad = (c: org.apache.spark.sql.Column) => coalesce(c, lit(true))
-    df.select(
-      col("key"), col("url"),
-      size(col("j.input_ids")).as("n_tokens"),
-      size(col("j.image")).as("n_images"),
-      (col("j").isNull || col("j.input_ids").isNull).as("bad_parse"),
-      bad(size(col("j.input_ids")) =!= size(col("j.loss_mask")))
-        .as("bad_mask_len"),
-      bad(size(col("j.input_ids")) >= MaxTokens).as("bad_token_len"),
-      bad(countId(ImStartId) =!= countId(ImEndId)).as("bad_start_end"),
-      bad(countId(ImPatchId) =!= size(col("j.image")) * PatchesPerImage)
-        .as("bad_patch_count"))
+    val s = col("s")
+    // size() of a null array: -1 under spark.sql.legacy.sizeOfNull
+    // without ANSI, else null; folded to a literal at planning
+    val nullSize = size(lit(null).cast(ArrayType(IntegerType)))
+    def sz(f: String) = coalesce(s.getField(f), nullSize)
+    // size(ids) - size(array_remove(ids, id)): the count, or
+    // nullSize - nullSize when the ids are null
+    def countId(f: String) = coalesce(s.getField(f), nullSize - nullSize)
+    val bad = (c: Column) => coalesce(c, lit(true))
+    shards.toDF()
+      .select(col("key"), col("url"),
+        PackedJsonStats.stats(col("entries").getItem("json")).as("s"))
+      .select(
+        col("key"), col("url"),
+        sz("ids").as("n_tokens"),
+        sz("images").as("n_images"),
+        (s.isNull || s.getField("ids").isNull).as("bad_parse"),
+        bad(sz("ids") =!= sz("mask")).as("bad_mask_len"),
+        bad(sz("ids") >= MaxTokens).as("bad_token_len"),
+        bad(countId("start") =!= countId("end")).as("bad_start_end"),
+        bad(countId("patch") =!= sz("images") * PatchesPerImage)
+          .as("bad_patch_count"))
   }
 
   /** Shard index `{url, nsamples}` (`check_pair.py:46`); throws if any
@@ -149,16 +155,19 @@ object CheckStage {
   }
 
   /** 1 % human-inspection dump (`check_pair.py:16-26,41-42`): ground
-    * truth text next to the loss-masked token stream. */
+    * truth text next to the loss-masked token stream. The entry is cast
+    * to a string, not decoded: an entry that is not valid UTF-8 parses
+    * with replacement characters instead of failing the job. */
   def inspectionSample(shards: Dataset[Sample], frac: Double = 0.01,
-      seed: Long = 42L): DataFrame = {
-    val df = parsed(shards)
-    df.sample(withReplacement = false, frac, seed)
+      seed: Long = 42L): DataFrame =
+    shards.toDF()
+      .sample(withReplacement = false, frac, seed)
+      .withColumn("j", from_json(
+        col("entries").getItem("json").cast(StringType), PackedJsonSchema))
       .select(col("key"), col("url"),
         concat_ws(" ", col("j.text")).as("gt_text"),
         col("j.input_ids").as("input_ids"),
         filter(arrays_zip(col("j.input_ids"), col("j.loss_mask")),
           s => s.getField("loss_mask") === 1)
           .getField("input_ids").as("loss_tokens"))
-  }
 }

@@ -95,4 +95,26 @@ class PipelineE2ESpec extends SparkSpec {
     assertThrows[IllegalArgumentException](
       CheckStage.index(malformed, strict = true).collect())
   }
+
+  test("E3: a json entry that is not valid UTF-8 is a bad_parse " +
+    "violation, not a failed job") {
+    import org.apache.spark.sql.Encoders
+    implicit val enc = Encoders.product[graft.wds.Sample]
+    val good = TarIO.utf8(
+      """{"image":[],"input_ids":[1,32001,32002],""" +
+        """"loss_mask":[0,1,1],"text":["x"]}""")
+    val invalid = good.take(12) ++ Array(0xff.toByte) ++ good.drop(12)
+    val shards = spark.createDataset(Seq(
+      graft.wds.Sample("0-0", "mem", Map("json" -> good)),
+      graft.wds.Sample("0-1", "mem", Map("json" -> invalid))))
+    val e = intercept[IllegalArgumentException](
+      CheckStage.index(shards, strict = true))
+    assert(e.getMessage.contains("1 samples violate"), e.getMessage)
+    // --lenient: the index still counts the sample
+    val idx = CheckStage.index(shards, strict = false).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(idx == Seq(("mem", 2L)))
+    // the inspection dump reads it too
+    assert(CheckStage.inspectionSample(shards, frac = 1.0).count() == 2)
+  }
 }

@@ -638,4 +638,69 @@ class PlanAuditSpec extends SparkSpec {
       assert(!s.output.map(_.name).contains("content"),
         "mm32: media content crossed an exchange"))
   }
+
+  test("CheckStage.index: one codegen'd scan per bin — no from_json, " +
+    "decode or array_remove, and one exchange (the url aggregate)") {
+    import java.util.concurrent.atomic.AtomicReference
+    import graft.functions.PackedJsonStats
+    import org.apache.spark.sql.catalyst.expressions.{ArrayRemove, JsonToStructs, StringDecode}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val packDir = java.nio.file.Files.createTempDirectory("pa_pack").toString
+    val tokDir = java.nio.file.Files.createTempDirectory("pa_tok").toString
+    // enough ~1k-token docs to flush whole 8k bins (a final partial
+    // bin is dropped)
+    val meta = (0 until 30).map(i => (s"videos/v$i.mp4", s"caption $i"))
+      .toDF("video_path", "value")
+    val packUrls = graft.pack.PackStage.run(meta, packDir,
+        graft.pack.PackStage.PackOptions(numSegments = 4, samplesPerTar = 10))
+      .collect().map(_.getAs[String]("url")).toSeq.sorted
+    val tokUrls = graft.tokenize.TokenizeStage.run(
+        graft.wds.WdsReader.readUrls(spark, packUrls).coalesce(1), tokDir)
+      .collect().map(_.getAs[String]("url")).toSeq
+    val tokenized = graft.wds.WdsReader.readUrls(spark, tokUrls)
+    // index() collects internally and returns a local relation: the
+    // plan that scanned the tars is the collect's, seen by a listener
+    val ran = new AtomicReference[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = ran.set(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      graft.index.CheckStage.index(tokenized, strict = true)
+      org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+    val qe = ran.get()
+    assert(qe != null, "the index collect was not delivered")
+    val plan = qe.executedPlan
+    val exprs = plan.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case e => e })
+    // decode() plans as a static call into StringDecode
+    val parsed = exprs.filter {
+      case _: JsonToStructs | _: StringDecode | _: ArrayRemove => true
+      case si: StaticInvoke => si.staticObject == classOf[StringDecode]
+      case _ => false
+    }
+    assert(parsed.isEmpty, s"${parsed.map(_.prettyName)} in:\n$plan")
+    val kernels = exprs.count(_.isInstanceOf[PackedJsonStats])
+    assert(kernels == 1, s"$kernels kernel calls in:\n$plan")
+    val inCodegen = plan.collect { case w: WholeStageCodegenExec => w }
+      .exists(_.child.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[PackedJsonStats]))))
+    assert(inCodegen, s"the kernel is outside whole-stage codegen:\n$plan")
+    val exchanges = plan.collect { case e: Exchange => e }
+    assert(exchanges.size == 1, s"${exchanges.size} exchanges:\n$plan")
+  }
 }
