@@ -263,7 +263,9 @@ class PlanAuditSpec extends SparkSpec {
     "shingle explode, one exact-dedup aggregate, text only on doc_id " +
     "exchanges") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Min, Partial}
-    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, GenerateExec,
+      InputAdapter, MapPartitionsExec, SerializeFromObjectExec, SparkPlan,
+      WholeStageCodegenExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -285,11 +287,26 @@ class PlanAuditSpec extends SparkSpec {
         val nested = inner.collect { case s: InMemoryTableScanExec => s }
         assert(nested.isEmpty, s"${nested.size} nested caches:\n$inner")
         val explodes = inner.collect {
-          case m: MapPartitionsExec
-              if m.func.getClass.getName.contains("ShingleHash") => m
+          case g: GenerateExec if g.generator.exists(
+              _.isInstanceOf[graft.functions.ShingleHashes]) => g
         }
         assert(explodes.size == 1,
           s"${explodes.size} shingle explodes:\n$inner")
+        // the explode runs in generated code, with no object round trip
+        def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+          case _: InputAdapter => Nil
+          case _ => p +: p.children.flatMap(stage)
+        }
+        val codegenExplodes = inner.collect {
+          case w: WholeStageCodegenExec => stage(w.child).filter(explodes.contains)
+        }.flatten
+        assert(codegenExplodes.size == 1,
+          s"the shingle explode is outside whole-stage codegen:\n$inner")
+        val objectOps = inner.collect {
+          case o @ (_: MapPartitionsExec | _: SerializeFromObjectExec |
+              _: DeserializeToObjectExec) => o.nodeName
+        }
+        assert(objectOps.isEmpty, s"object operators $objectOps:\n$inner")
         // min(doc_id) per content hash is the funnel's only min()
         val dedupAggs = inner.collect {
           case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
