@@ -22,6 +22,16 @@ if grep -rn "localCheckpoint(" src/main; then
   exit 1
 fi
 
+# tokenize carries primitive ints from the special-token scan to the
+# bin writer, and writes the bin json straight to UTF-8 bytes: no
+# boxed id builders, no boxed masks, no char-level json writer.
+if grep -rnE "newBuilder\[Int\]|IndexedSeq\.fill|StringWriter" \
+    src/main/scala/graft/tokenize; then
+  echo "[preflight] boxed ids or a char writer in graft.tokenize —" \
+    "use IntBuffer and BinJson"
+  exit 1
+fi
+
 echo "[preflight] sbt compile (main + test)..."
 sbt -batch "compile; Test/compile" >/tmp/preflight_compile.log 2>&1 || {
   echo "[preflight] COMPILE FAILED — tail of log:"

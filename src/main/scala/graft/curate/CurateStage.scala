@@ -109,11 +109,17 @@ object CurateStage {
     def close(): Unit = { cached.unpersist(blocking = true): Unit }
   }
 
+  /** Words of a text split on ' ': its spaces + 1, which is what
+    * `size(split(text, " "))` counts, without building the words.
+    * Null for a null text. */
+  private[curate] def wordCount(text: Column): Column =
+    octet_length(text) - octet_length(replace(text, lit(" "), lit(""))) + 1
+
   /** Raw-text C4 keep flag (the qt09 heuristics minus the fixture's
     * synthetic punctuation axes, which real corpora carry natively).
     * Null text yields null comparisons → otherwise(0): dropped. */
   private def qualityKeep(minWords: Int): Column = {
-    val nWords = size(split(col("text"), " "))
+    val nWords = wordCount(col("text"))
     val meanLen = (length(col("text")) - (nWords - 1)).cast("double") / nWords
     val hasBad = lower(col("text")).contains("lorem ipsum") ||
       col("text").contains("{") || lower(col("text")).contains("javascript")

@@ -1,10 +1,8 @@
 package graft.tokenize
 
-import com.fasterxml.jackson.core.JsonFactory
 import graft.pack.Conversations
 import graft.pack.Conversations.Turn
 import graft.wds.{Codecs, Sample, TarIO, WdsWriter}
-import java.io.StringWriter
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -30,8 +28,8 @@ object TokenizeStage {
       key: String,
       imageNames: Seq[String],
       images: Seq[Array[Byte]],
-      inputIds: Seq[Int],
-      lossMask: Seq[Int],
+      inputIds: Array[Int],
+      lossMask: Array[Int],
       text: String)
 
   /** A merged ≤8k pack (K5 `save_to_tar` result, pre-serialization). */
@@ -39,16 +37,32 @@ object TokenizeStage {
       key: String,
       image: Seq[String],
       images: Seq[Array[Byte]],
-      inputIds: Seq[Int],
-      lossMask: Seq[Int],
+      inputIds: Array[Int],
+      lossMask: Array[Int],
       text: Seq[String])
 
   /** K5 merge (`tokenize/main.py:73-85`): first doc is the base; trailing
-    * docs contribute ids/mask minus their BOS; images renumbered 0..n. */
+    * docs contribute ids/mask minus their BOS; images renumbered 0..n.
+    * Each doc is copied once into an exact-size array. */
   def merge(key: String, docs: Seq[TokDoc]): Packed = {
     require(docs.nonEmpty)
-    val ids = docs.head.inputIds ++ docs.tail.flatMap(_.inputIds.drop(1))
-    val mask = docs.head.lossMask ++ docs.tail.flatMap(_.lossMask.drop(1))
+    def concat(part: TokDoc => Array[Int]): Array[Int] = {
+      val head = part(docs.head)
+      val out = new Array[Int](head.length +
+        docs.tail.iterator.map(d => math.max(0, part(d).length - 1)).sum)
+      System.arraycopy(head, 0, out, 0, head.length)
+      var pos = head.length
+      docs.tail.foreach { d =>
+        val a = part(d)
+        if (a.length > 1) {
+          System.arraycopy(a, 1, out, pos, a.length - 1)
+          pos += a.length - 1
+        }
+      }
+      out
+    }
+    val ids = concat(_.inputIds)
+    val mask = concat(_.lossMask)
     val images = docs.flatMap(_.images)
     Packed(key, images.indices.map(_.toString), images, ids, mask,
       docs.map(_.text))
@@ -207,37 +221,14 @@ object TokenizeStage {
     }
   }
 
-  private val jsonFactory = new JsonFactory
-
   /** Serialize a Packed to the tokenized-shard sample group:
-    * `<key>.json` + `<key>-<i>.jpg` (`main.py:73-85`). The json is
-    * streamed through one Jackson generator over a Writer — json4s's
-    * `compact` takes the same path, so key order, escaping and (via
-    * [[TarIO.utf8]]) lone-surrogate bytes are unchanged — with no AST
-    * node or BigInt per id. */
+    * `<key>.json` + `<key>-<i>.jpg` (`main.py:73-85`); the json is
+    * [[BinJson]]'s bytes. */
   def toSampleGroup(p: Packed, url: String = ""): Sample = {
-    val w = new StringWriter(64 + 8 * p.inputIds.length +
-      p.text.iterator.map(_.length).sum)
-    val g = jsonFactory.createGenerator(w)
-    g.writeStartObject()
-    g.writeArrayFieldStart("image")
-    p.image.foreach(g.writeString)
-    g.writeEndArray()
-    g.writeArrayFieldStart("input_ids")
-    p.inputIds.foreach(g.writeNumber(_: Int))
-    g.writeEndArray()
-    g.writeArrayFieldStart("loss_mask")
-    p.lossMask.foreach(g.writeNumber(_: Int))
-    g.writeEndArray()
-    g.writeArrayFieldStart("text")
-    p.text.foreach(g.writeString)
-    g.writeEndArray()
-    g.writeEndObject()
-    g.close()
     val frameEntries = p.images.zipWithIndex.map { case (b, i) =>
       s"$i.jpg" -> b
     }.toMap
-    Sample(p.key, url, frameEntries + ("json" -> TarIO.utf8(w.toString)))
+    Sample(p.key, url, frameEntries + ("json" -> BinJson(p)))
   }
 
   /** Physical write order for a packed sample (json first, then frames
@@ -276,6 +267,7 @@ object TokenizeStage {
       var tarIdx = -1
       var fileIdx = -1
       var lastUrl: String = null
+      val (idBuf, maskBuf) = (new IntBuffer, new IntBuffer)
       val docs = it.flatMap { s =>
         if (s.url != lastUrl) { lastUrl = s.url; tarIdx += 1; fileIdx = -1 }
         parsePackSample(s, sampleType).flatMap { p =>
@@ -287,8 +279,8 @@ object TokenizeStage {
           if (!p.valid || p.images.length != p.names.length)
             None
           else {
-            val (ids, mask, text) =
-              Tokenizers.tokenizeConversation(p.turns, tokenizer)
+            val (ids, mask, text) = Tokenizers.tokenizeConversation(
+              p.turns, tokenizer, idBuf, maskBuf)
             Some(TokDoc(s"$tarIdx-$fileIdx", p.names,
               p.images.map(resizeIfNeeded), ids, mask, text))
           }

@@ -30,37 +30,37 @@ final class WordHashModel extends SubwordModel {
       .map(w => 100 + math.floorMod(fnv(w), 31800))
 }
 
-/** Greedy longest-match subword model over a fixed vocabulary — the
-  * deterministic stand-in for a SentencePiece unigram model: each
-  * whitespace word is segmented by repeatedly taking the longest vocab
-  * piece that prefixes the remainder, with a per-character byte-fallback
-  * (ids 4..259) for uncovered text, like SentencePiece's byte_fallback.
-  * Production swaps in a JVM SentencePiece binding behind the same
-  * trait; every algorithm downstream (special-token scan, conversation
-  * framing, 8k packing, check invariants) is agnostic to the choice. */
-final class GreedySubwordModel(vocab: Seq[String]) extends SubwordModel {
-  require(vocab.nonEmpty)
-  private val byLen = vocab.distinct.sortBy(-_.length)
-  private val ids: Map[String, Int] =
-    byLen.zipWithIndex.map { case (p, i) => p -> (300 + i) }.toMap
+/** Growable primitive int buffer: the id and mask scratch of the
+  * tokenize path, appended in place with no boxing. */
+final class IntBuffer(initialCapacity: Int = 1024) {
+  private var arr = new Array[Int](initialCapacity)
+  private var n = 0
 
-  def encode(text: String): IndexedSeq[Int] = {
-    val out = IndexedSeq.newBuilder[Int]
-    text.split("\\s+").filter(_.nonEmpty).foreach { word =>
-      var rest = word
-      while (rest.nonEmpty) {
-        byLen.find(rest.startsWith) match {
-          case Some(piece) =>
-            out += ids(piece)
-            rest = rest.substring(piece.length)
-          case None =>
-            out += 4 + (rest.charAt(0) & 0xff) // byte fallback
-            rest = rest.substring(1)
-        }
-      }
-    }
-    out.result()
+  def length: Int = n
+  def clear(): Unit = n = 0
+
+  private def reserve(extra: Int): Unit =
+    if (n + extra > arr.length)
+      arr = java.util.Arrays.copyOf(arr, math.max(2 * arr.length, n + extra))
+
+  def +=(v: Int): Unit = { reserve(1); arr(n) = v; n += 1 }
+
+  /** an `ArraySeq.ofInt` (what [[SentencePieceModel.encode]] returns)
+    * copies with one `System.arraycopy`. */
+  def ++=(xs: IndexedSeq[Int]): Unit = {
+    reserve(xs.length)
+    xs.copyToArray(arr, n)
+    n += xs.length
   }
+
+  /** append `count` copies of `v`. */
+  def fill(count: Int, v: Int): Unit = {
+    reserve(count)
+    java.util.Arrays.fill(arr, n, n + count, v)
+    n += count
+  }
+
+  def toArray: Array[Int] = java.util.Arrays.copyOf(arr, n)
 }
 
 /** Special-token-aware tokenizer: scans for the earliest special token,
@@ -71,42 +71,46 @@ final class SpecialTokenTokenizer(
     model: SubwordModel,
     val specialTokens: Map[String, Int]) extends Serializable {
 
-  private val toks = specialTokens.toArray
+  private val tokens = specialTokens.keys.toArray
+  private val tokenIds = tokens.map(specialTokens)
 
-  /** Single left-to-right scan: each special token's next occurrence is
-    * tracked monotonically (indexOf resumes from the cursor), so a
-    * sentinel-dense prompt costs O(tokens · |text|) total instead of
-    * the naive rescan-the-tail-per-emission quadratic. Semantics
-    * unchanged: earliest occurrence wins, ties prefer the longest
-    * token. */
-  def tokenize(text: String): IndexedSeq[Int] = {
-    val out = IndexedSeq.newBuilder[Int]
-    val nextPos = toks.map { case (t, _) => text.indexOf(t) }
+  /** Append the ids of `text` to `out` in one left-to-right scan: each
+    * special token's next occurrence is tracked monotonically (indexOf
+    * resumes from the cursor), so a sentinel-dense prompt costs
+    * O(tokens · |text|) total instead of the naive
+    * rescan-the-tail-per-emission quadratic. The earliest occurrence
+    * wins; on a tie the longest token wins. */
+  def tokenizeInto(text: String, out: IntBuffer): Unit = {
+    val nextPos = new Array[Int](tokens.length)
+    var i = 0
+    while (i < tokens.length) { nextPos(i) = text.indexOf(tokens(i)); i += 1 }
     var cur = 0
     while (cur < text.length) {
       var best = -1
-      var i = 0
-      while (i < toks.length) {
-        if (nextPos(i) >= 0 && nextPos(i) < cur)
-          nextPos(i) = text.indexOf(toks(i)._1, cur)
-        if (nextPos(i) >= 0 &&
-          (best < 0 || nextPos(i) < nextPos(best) ||
-            (nextPos(i) == nextPos(best) &&
-              toks(i)._1.length > toks(best)._1.length)))
+      var bestPos = -1
+      i = 0
+      while (i < tokens.length) {
+        var p = nextPos(i)
+        if (p >= 0 && p < cur) {
+          p = text.indexOf(tokens(i), cur)
+          nextPos(i) = p
+        }
+        if (p >= 0 && (best < 0 || p < bestPos ||
+            (p == bestPos && tokens(i).length > tokens(best).length))) {
           best = i
+          bestPos = p
+        }
         i += 1
       }
       if (best < 0) {
         out ++= model.encode(text.substring(cur))
         cur = text.length
       } else {
-        val pos = nextPos(best)
-        if (pos > cur) out ++= model.encode(text.substring(cur, pos))
-        out += toks(best)._2
-        cur = pos + toks(best)._1.length
+        if (bestPos > cur) out ++= model.encode(text.substring(cur, bestPos))
+        out += tokenIds(best)
+        cur = bestPos + tokens(best).length
       }
     }
-    out.result()
   }
 }
 
@@ -125,26 +129,29 @@ object Tokenizers {
 
   /** F16 `tokenize_conversation` (`tokenize/main.py:132-147`): BOS id
     * [1] + per-turn ids (gpt turns get EOS appended pre-tokenize);
-    * loss_mask 0 for human/BOS, 1 for gpt; text joined with '\n'. */
+    * loss_mask 0 for human/BOS, 1 for gpt; text joined with '\n'. The
+    * ids and mask are built in `ids`/`mask` (cleared first; a caller
+    * tokenizing many conversations passes the same two) and returned
+    * as exact-size copies. */
   def tokenizeConversation(
       conversation: Seq[Turn],
-      tokenizer: SpecialTokenTokenizer):
-      (IndexedSeq[Int], IndexedSeq[Int], String) = {
-    val ids = IndexedSeq.newBuilder[Int]
-    val mask = IndexedSeq.newBuilder[Int]
+      tokenizer: SpecialTokenTokenizer,
+      ids: IntBuffer = new IntBuffer,
+      mask: IntBuffer = new IntBuffer): (Array[Int], Array[Int], String) = {
+    ids.clear()
+    mask.clear()
     val text = new StringBuilder(Conversations.BosToken)
     ids += 1
     mask += 0
     conversation.zipWithIndex.foreach { case (turn, idx) =>
       val tmp = turn.value +
         (if (turn.from == "gpt") Conversations.EosToken else "")
-      val tokIds = tokenizer.tokenize(tmp)
-      val label = if (turn.from == "human") 0 else 1
+      val before = ids.length
+      tokenizer.tokenizeInto(tmp, ids)
+      mask.fill(ids.length - before, if (turn.from == "human") 0 else 1)
       if (idx > 0) text.append('\n')
       text.append(tmp)
-      ids ++= tokIds
-      mask ++= IndexedSeq.fill(tokIds.length)(label)
     }
-    (ids.result(), mask.result(), text.toString)
+    (ids.toArray, mask.toArray, text.toString)
   }
 }

@@ -29,6 +29,27 @@ class CurateStageSpec extends SparkSpec {
     else Set(ws.mkString(" "))
   }
 
+  test("wordCount counts what size(split(text, \" \")) counts") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.StringType
+    val texts = graft.functions.ShingleHashSpec.hostile ++ Seq(
+      "", " ", "a", " a", "a ", " a ", "a  b", "a   b  c ", "\t", "a\tb",
+      "\t a \t", "\u00a0 \u2003 \u3000", "😀 😀")
+    val invalid = Seq(Array[Byte](0x41, 0x20, 0xff.toByte, 0x20, 0x42),
+      Array[Byte](0xc3.toByte, 0x20, 0x61, 0x20, 0xed.toByte, 0xa0.toByte,
+        0xbd.toByte, 0x20, 0x62), Array[Byte](0x20, 0xe2.toByte, 0x82.toByte),
+      Array[Byte](0xf0.toByte, 0x20, 0x9f.toByte, 0x20))
+    val df = texts.toDF("text").union(
+      invalid.toDF("b").select($"b".cast(StringType).as("text")))
+    val rows = df.select($"text", CurateStage.wordCount($"text"),
+      size(split($"text", " "))).collect()
+    assert(rows.length == texts.length + invalid.length)
+    rows.foreach(r => assert(r.getInt(1) == r.getInt(2), s"text: ${r.get(0)}"))
+    val nul = Seq(Option.empty[String]).toDF("text")
+      .select(CurateStage.wordCount($"text")).head()
+    assert(nul.isNullAt(0))
+  }
+
   test("curated set equals brute-force sequential funnel") {
     import spark.implicits._
     val docs = docsDf().select($"doc_id", $"text", $"lang")

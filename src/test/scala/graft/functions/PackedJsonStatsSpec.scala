@@ -213,7 +213,7 @@ class PackedJsonStatsSpec extends SparkSpec {
       val text = Seq.fill(rnd.nextInt(3))(
         rnd.alphanumeric.take(rnd.nextInt(20)).mkString + "\"\\ü\n")
       val p = TokenizeStage.Packed(s"k$i", (0 until nImg).map(_.toString),
-        Seq.fill(nImg)(Array[Byte](1)), ids, mask, text)
+        Seq.fill(nImg)(Array[Byte](1)), ids.toArray, mask.toArray, text)
       new String(TokenizeStage.toSampleGroup(p).entries("json"), UTF_8)
     }
   }

@@ -22,6 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * that change length, runs of spaces, other whitespace). */
 class ShingleHashSpec extends SparkSpec {
   import spark.implicits._
+  import ShingleHashSpec.hostile
 
   private val sf = "/root/testdata/sf0.001"
   private val widths = Seq(1, 3, 5)
@@ -60,28 +61,6 @@ class ShingleHashSpec extends SparkSpec {
       case (k, None) => spark.conf.unset(k)
     }
   }
-
-  private val hostile: Seq[String] = Seq(
-    // lone surrogates at a word's end and start, and alone
-    "ab\uD83D cd ef gh ij", "ab \uDE00cd ef gh", "\uD83D", "\uDE00",
-    "x \uD83D \uDE00 y z", "\uDE00\uD83D a b c d e",
-    // surrogate pairs and accented text
-    "😀 smile 😀 smile 😀",
-    "Café Crème brûlée à la carte Ünïcödé ÉTÉ",
-    // lowercase of a different length: İ → i̇, K (kelvin) → k, Å → å
-    "İSTANBUL İzmir İ i İ", "KK K Å Å", "ΟΔΟΣ ΟΔΟΣ ΣΑΣ",
-    "ǅ ǈ ǋ ǲ", "ﬀ ß ẞ",
-    // empty, spaces only, doubled, leading and trailing spaces
-    "", " ", "   ", "a  b  c  d  e  f", " a b c d e", "a b c d e ",
-    "  a b  ", "a b c d e f g h i j ", " ",
-    // the split is on ' ' only
-    "a\tb\tc d\ne f\r\ng h", "\t\t\t", "\n", "a b c d e f",
-    // fewer words than k, exactly k words
-    "one", "one two", "one two three", "one two three four five",
-    "one two three four five six",
-    // one gram repeated many times
-    Seq.fill(200)("la").mkString(" "), Seq.fill(60)("a b c").mkString(" "),
-    Seq.fill(40)("Dup dup DUP").mkString(" "))
 
   private def randomTexts(seed: Long, n: Int): Seq[String] = {
     val rnd = new Random(seed)
@@ -277,4 +256,30 @@ object ShingleHashOracle {
     }
     sb.toString
   }
+}
+
+object ShingleHashSpec {
+  /** texts that stress a ' ' word split: surrogates, case mappings that
+    * change length, runs of spaces, other whitespace, few words. */
+  val hostile: Seq[String] = Seq(
+    // lone surrogates at a word's end and start, and alone
+    "ab\uD83D cd ef gh ij", "ab \uDE00cd ef gh", "\uD83D", "\uDE00",
+    "x \uD83D \uDE00 y z", "\uDE00\uD83D a b c d e",
+    // surrogate pairs and accented text
+    "😀 smile 😀 smile 😀",
+    "Café Crème brûlée à la carte Ünïcödé ÉTÉ",
+    // lowercase of a different length: İ → i̇, K (kelvin) → k, Å → å
+    "İSTANBUL İzmir İ i İ", "KK K Å Å", "ΟΔΟΣ ΟΔΟΣ ΣΑΣ",
+    "ǅ ǈ ǋ ǲ", "ﬀ ß ẞ",
+    // empty, spaces only, doubled, leading and trailing spaces
+    "", " ", "   ", "a  b  c  d  e  f", " a b c d e", "a b c d e ",
+    "  a b  ", "a b c d e f g h i j ", " ",
+    // the split is on ' ' only
+    "a\tb\tc d\ne f\r\ng h", "\t\t\t", "\n", "a b c d e f",
+    // fewer words than k, exactly k words
+    "one", "one two", "one two three", "one two three four five",
+    "one two three four five six",
+    // one gram repeated many times
+    Seq.fill(200)("la").mkString(" "), Seq.fill(60)("a b c").mkString(" "),
+    Seq.fill(40)("Dup dup DUP").mkString(" "))
 }

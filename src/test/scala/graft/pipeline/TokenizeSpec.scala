@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.pack.Conversations
 import graft.pack.Conversations.Turn
-import graft.tokenize.{Tokenizers, TokenizeStage}
+import graft.tokenize.{IntBuffer, SpecialTokenTokenizer, Tokenizers, TokenizeStage}
 import graft.tokenize.TokenizeStage.TokDoc
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -11,8 +11,14 @@ class TokenizeSpec extends AnyFunSuite {
 
   private val tok = Tokenizers.testTokenizer()
 
+  private def tokenize(t: SpecialTokenTokenizer, text: String): Seq[Int] = {
+    val out = new IntBuffer
+    t.tokenizeInto(text, out)
+    out.toArray.toSeq
+  }
+
   test("special-token scan: earliest token wins, ids fixed") {
-    val ids = tok.tokenize(
+    val ids = tokenize(tok,
       "hello " + Conversations.ImStartToken + Conversations.ImPatchToken +
         Conversations.ImEndToken + " world")
     assert(ids.count(_ == 32001) == 1)
@@ -24,7 +30,7 @@ class TokenizeSpec extends AnyFunSuite {
   }
 
   test("expanded sentinel yields exactly 258 special ids per image") {
-    val ids = tok.tokenize(Conversations.SpecialToken)
+    val ids = tokenize(tok, Conversations.SpecialToken)
     assert(ids.length == 258)
     assert(ids.head == 32001 && ids.last == 32002)
     assert(ids.count(_ == 32000) == 256)
@@ -58,12 +64,12 @@ class TokenizeSpec extends AnyFunSuite {
     // full tokenizer stack runs over it
     val tok = new graft.tokenize.SpecialTokenTokenizer(
       m, graft.tokenize.Tokenizers.MultimodalSpecials)
-    val ids = tok.tokenize("cat " + Conversations.SpecialToken + " cats")
+    val ids = tokenize(tok, "cat " + Conversations.SpecialToken + " cats")
     assert(ids.count(_ == 32000) == 256)
   }
 
   private def doc(key: String, n: Int): TokDoc =
-    TokDoc(key, Nil, Nil, IndexedSeq.fill(n)(7), IndexedSeq.fill(n)(0), s"t$key")
+    TokDoc(key, Nil, Nil, Array.fill(n)(7), Array.fill(n)(0), s"t$key")
 
   test("greedyPack: flush on overflow with incoming key; drop final partial") {
     val docs = Iterator(
@@ -109,12 +115,12 @@ class TokenizeSpec extends AnyFunSuite {
 
   test("merge drops BOS of trailing docs and renumbers images") {
     val a = TokDoc("0-0", Seq("x-0"), Seq(Array[Byte](1)),
-      IndexedSeq(1, 10, 11), IndexedSeq(0, 0, 1), "ta")
+      Array(1, 10, 11), Array(0, 0, 1), "ta")
     val b = TokDoc("0-1", Seq("y-0"), Seq(Array[Byte](2)),
-      IndexedSeq(1, 20, 21), IndexedSeq(0, 1, 1), "tb")
+      Array(1, 20, 21), Array(0, 1, 1), "tb")
     val m = TokenizeStage.merge("0-1", Seq(a, b))
-    assert(m.inputIds == Seq(1, 10, 11, 20, 21))
-    assert(m.lossMask == Seq(0, 0, 1, 1, 1))
+    assert(m.inputIds.toSeq == Seq(1, 10, 11, 20, 21))
+    assert(m.lossMask.toSeq == Seq(0, 0, 1, 1, 1))
     assert(m.image == Seq("0", "1"))
     assert(m.text == Seq("ta", "tb"))
   }

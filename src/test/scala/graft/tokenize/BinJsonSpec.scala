@@ -7,17 +7,17 @@ import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Byte identity of the tokenized bin's json entry: the streaming
-  * writer in [[TokenizeStage.toSampleGroup]] must produce exactly the
-  * bytes json4s `compact(render(…))` of the same four fields produced,
-  * which stays here only as the oracle. */
+/** Byte identity of the tokenized bin's json entry: the byte writer
+  * [[BinJson]] behind [[TokenizeStage.toSampleGroup]] must produce
+  * exactly the bytes json4s `compact(render(…))` of the same four
+  * fields produced, which stays here only as the oracle. */
 class BinJsonSpec extends AnyFunSuite {
 
   private def oracle(p: Packed): Array[Byte] = {
     val json: JValue =
       ("image" -> p.image) ~
-        ("input_ids" -> p.inputIds) ~
-        ("loss_mask" -> p.lossMask) ~
+        ("input_ids" -> p.inputIds.toSeq) ~
+        ("loss_mask" -> p.lossMask.toSeq) ~
         ("text" -> p.text)
     TarIO.utf8(JsonMethods.compact(JsonMethods.render(json)))
   }
@@ -34,7 +34,8 @@ class BinJsonSpec extends AnyFunSuite {
       ids: Seq[Int] = Seq(1, 2),
       mask: Seq[Int] = Seq(0, 1),
       text: Seq[String] = Seq("t")): Packed =
-    Packed("0-0", image, image.map(_ => Array[Byte](1)), ids, mask, text)
+    Packed("0-0", image, image.map(_ => Array[Byte](1)), ids.toArray,
+      mask.toArray, text)
 
   private val controls = (0 until 0x20).map(_.toChar).mkString
 
@@ -71,6 +72,43 @@ class BinJsonSpec extends AnyFunSuite {
     assertSame(packed(ids = ids, mask = ids.reverse))
   }
 
+  test("every ASCII char alone and next to multi-byte chars") {
+    (0 until 0x80).map(_.toChar).foreach { c =>
+      assertSame(packed(text = Seq(c.toString, s"é${c}中", s"$c😀", s"😀${c}€")))
+      assertSame(packed(image = Seq(c.toString, s"ü${c}")))
+    }
+    assertSame(packed(text = Seq((0 until 0x80).map(_.toChar).mkString)))
+  }
+
+  test("lone surrogates at the start and end of a string") {
+    Seq("\ud800abc", "abc\udbff", "\udc00abc", "abc\udfff", "\ud800",
+      "\udfff", "\ud83d\ud83d", "\ude00\ud83d", "\ud800\"", "\"\udc00",
+      "\n\ud800\t", "\ud83d😀\ude00"
+    ).foreach { t =>
+      assertSame(packed(text = Seq(t)))
+      assertSame(packed(image = Seq(t), text = Seq(t, t)))
+    }
+  }
+
+  test("strings that are only escapes") {
+    Seq("\"", "\\", "\"\\\"", "\b\t\n\f\r", controls, controls * 3,
+      "\u0000", "\u001f\u0000\u001f", "\\\\\\\\", "\"\"\"\"\"\""
+    ).foreach { t =>
+      assertSame(packed(text = Seq(t)))
+      assertSame(packed(image = Seq(t, t), text = Seq(t, "", t)))
+    }
+  }
+
+  test("ids in every decimal-length bucket, both signs") {
+    val pow = Iterator.iterate(1L)(_ * 10).takeWhile(_ <= 1000000000L)
+      .map(_.toInt).toSeq
+    val ids = Seq(0, Int.MaxValue, Int.MinValue, Int.MinValue + 1) ++
+      pow.flatMap(p => Seq(p - 1, p, p + 1)) ++
+      pow.flatMap(p => Seq(-p + 1, -p, -p - 1))
+    assertSame(packed(ids = ids, mask = ids.reverse))
+    ids.foreach(i => assertSame(packed(ids = Seq(i), mask = Seq(i))))
+  }
+
   test("seeded random bins of a realistic size") {
     val rnd = new scala.util.Random(7)
     val alphabet = "ab \"\\/<>\n\t\u0000\u001f\u007fü中😀𐀀▁"
@@ -88,7 +126,7 @@ class BinJsonSpec extends AnyFunSuite {
 
   test("frame entries and key ride along unchanged") {
     val p = Packed("3-7", Seq("0", "1"),
-      Seq(Array[Byte](1, 2), Array[Byte](3)), Seq(1), Seq(0), Seq("x"))
+      Seq(Array[Byte](1, 2), Array[Byte](3)), Array(1), Array(0), Seq("x"))
     val s = TokenizeStage.toSampleGroup(p, "url")
     assert(s.key == "3-7" && s.url == "url")
     assert(s.entries.keySet == Set("json", "0.jpg", "1.jpg"))
