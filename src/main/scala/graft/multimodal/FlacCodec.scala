@@ -177,9 +177,6 @@ object FlacCodec {
     case _ => throw new IllegalArgumentException(s"block size code $code")
   }
 
-  private val RateTable = Array(0, 88200, 176400, 192000, 8000, 16000,
-    22050, 24000, 32000, 44100, 48000, 96000)
-
   private val FixedCoefs: Array[Array[Int]] = Array(
     Array(), Array(1), Array(2, -1), Array(3, -3, 1), Array(4, -6, 4, -1))
 

@@ -1,9 +1,8 @@
 package graft.multimodal
 
 import graft.wds.Codecs
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal columns: image/audio/video as opaque `BINARY` columns with
   * typed metadata structs, plus the decode / feature-extract / resize /
@@ -22,19 +21,6 @@ import org.apache.spark.sql.types._
   * column away at the parquet scan (test-asserted in MediaColumnsSpec).
   */
 object MediaColumns {
-
-  /** Spark image-schema-aligned struct. */
-  val ImageMetaSchema: StructType = StructType(Seq(
-    StructField("height", IntegerType),
-    StructField("width", IntegerType),
-    StructField("nChannels", IntegerType),
-    StructField("mode", StringType)))
-
-  final case class MediaRow(
-      media_id: Long,
-      kind: String, // image | audio | video
-      content: Array[Byte],
-      meta_json: String)
 
   final case class ImageFeatures(
       media_id: Long,
@@ -132,14 +118,6 @@ object MediaColumns {
         }
       }.toDF()
   }
-
-  /** Legacy byte-stats fallback for non-WAV audio (the pre-decode
-    * stub, kept for opaque codecs until the ffmpeg seam is wired). */
-  def audioFeaturesStub(df: DataFrame): DataFrame =
-    df.select(col("media_id"),
-      length(col("content")).cast("long").as("n_bytes"),
-      // placeholder for real spectral features: deterministic byte crc
-      crc32(col("content")).as("content_crc"))
 
   final case class SceneCuts(
       media_id: Long,
@@ -367,12 +345,4 @@ object MediaColumns {
         }
       }.toDF()
   }
-
-  /** Pack media rows for training: metadata-only projection — asserts
-    * the binary column is pruned from the scan (see spec). */
-  def mediaCatalog(df: DataFrame): DataFrame =
-    df.groupBy(col("kind"))
-      .agg(count(lit(1)).as("n"),
-        sum(length(col("content"))).as("total_bytes"))
-      .orderBy(col("kind"))
 }

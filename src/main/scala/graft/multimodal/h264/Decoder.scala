@@ -203,14 +203,6 @@ object Decoder {
     decodePicture(slices, cfg, list0, list1, curPoc)
   }
 
-  /** true iff the sample's slice NAL is a reference picture
-    * (nal_ref_idc > 0) — non-reference samples can be skipped during a
-    * GOP walk when they aren't the target frame. */
-  def isReference(sample: Array[Byte], cfg: AvcConfig): Boolean =
-    Nal.splitAvccSample(sample, cfg.nalLengthSize).collectFirst {
-      case (t, refIdc, _) if t == 5 || t == 1 => refIdc > 0
-    }.getOrElse(false)
-
   /** true iff the sample's slice NAL is an IDR (type 5) — an IDR
     * resets the DPB: no picture decoded before it may be referenced
     * after it (8.2.5.1). */

@@ -2,14 +2,16 @@ package graft.multimodal.h264
 
 import graft.multimodal.Mp4Samples
 
-/** Fixture-grade H.264 baseline I-frame encoder: YUV 4:2:0 planes →
-  * IDR AVCC samples → avc1 MP4 (with the avcC config in stsd). Every
-  * emitted stream is conformant constrained-baseline: Intra_16x16
-  * (V/H/DC/Plane chosen by SAD) or I_PCM macroblocks, CAVLC residuals
-  * (luma DC Hadamard path + AC, chroma DC + AC), one IDR slice per
-  * frame. The DECODER ([[Decoder]]) is the product; this exists so the
-  * repo can commit real avc1 fixtures without ffmpeg (the reference
-  * generates its test media with ffmpeg, `pack/tools.py:101-140`).
+/** Fixture-grade H.264 baseline encoder: YUV 4:2:0 planes → AVCC
+  * samples → avc1 MP4 (with the avcC config in stsd). Every emitted
+  * stream is conformant constrained-baseline: IDR pictures of
+  * Intra_16x16 (V/H/DC/Plane chosen by SAD) or I_PCM macroblocks, P
+  * pictures of P_L0_16x16 / P_Skip macroblocks at a constant MV, CAVLC
+  * residuals (luma DC Hadamard path + AC, chroma DC + AC), one or more
+  * slices per picture. The DECODER ([[Decoder]]) is the product; this
+  * exists so the repo can commit real avc1 fixtures without ffmpeg (the
+  * reference generates its test media with ffmpeg,
+  * `pack/tools.py:101-140`).
   *
   * Conformance guard: quantized blocks are clamped to TotalCoeff <= 13
   * (smallest levels zeroed — a legal lossy choice) so no stream
@@ -33,8 +35,7 @@ object Encoder {
     (0, 0), (1, 0), (0, 1), (1, 1), (2, 0), (3, 0), (2, 1), (3, 1),
     (0, 2), (1, 2), (0, 3), (1, 3), (2, 2), (3, 2), (2, 3), (3, 3))
 
-  def spsFor(width: Int, height: Int, deblock: Boolean = true,
-      numRefFrames: Int = 1): Sps = {
+  def spsFor(width: Int, height: Int, numRefFrames: Int = 1): Sps = {
     val mbW = (width + 15) / 16
     val mbH = (height + 15) / 16
     Sps(profileIdc = 66, levelIdc = 10, log2MaxFrameNum = 4,
@@ -146,37 +147,15 @@ object Encoder {
     out.array()
   }
 
-  /** wrap a finished slice RBSP as a 4-byte-length AVCC IDR sample */
-  private[h264] def avccSample(w: BitWriter): Array[Byte] = {
-    w.rbspTrailing()
-    val nal = Nal.unit(3, 5, w.toBytes)
-    val out = java.nio.ByteBuffer.allocate(4 + nal.length)
-    out.putInt(nal.length)
-    out.put(nal)
-    out.array()
-  }
-
-  /** wrap a finished P-slice RBSP as a non-IDR reference sample */
-  private[h264] def avccSampleP(w: BitWriter): Array[Byte] = {
-    w.rbspTrailing()
-    val nal = Nal.unit(3, 1, w.toBytes)
-    val out = java.nio.ByteBuffer.allocate(4 + nal.length)
-    out.putInt(nal.length)
-    out.put(nal)
-    out.array()
-  }
-
-  /** wrap a finished B-slice RBSP as a NON-REFERENCE sample
-    * (nal_ref_idc 0 — the common B layout: nothing references it, so
-    * a GOP walk may skip it) */
-  private[h264] def avccSampleB(w: BitWriter): Array[Byte] = {
-    w.rbspTrailing()
-    val nal = Nal.unit(0, 1, w.toBytes)
-    val out = java.nio.ByteBuffer.allocate(4 + nal.length)
-    out.putInt(nal.length)
-    out.put(nal)
-    out.array()
-  }
+  /** one-slice samples: an IDR, a non-IDR reference (P), and a
+    * NON-REFERENCE picture (nal_ref_idc 0 — the common B layout:
+    * nothing references it, so a GOP walk may skip it) */
+  private[h264] def avccSample(w: BitWriter): Array[Byte] =
+    avccSampleMulti(Seq(w), nalType = 5)
+  private[h264] def avccSampleP(w: BitWriter): Array[Byte] =
+    avccSampleMulti(Seq(w), nalType = 1)
+  private[h264] def avccSampleB(w: BitWriter): Array[Byte] =
+    avccSampleMulti(Seq(w), nalType = 1, refIdc = 0)
 
   /** B slice header (7.3.3): spatial direct, optional per-list active
     * override, optional list modification and EXPLICIT bipred weight
@@ -341,6 +320,110 @@ object Encoder {
     else if (active > 2) w.ue(refIdx)
   }
 
+  /** 9.2.1 nC of block (gbx, gby) in a TotalCoeff map holding `per`
+    * blocks per MB side (4 luma, 2 chroma): the rounded mean of the
+    * left and top neighbours, counting only those whose MB lies in the
+    * current slice (`sliceStart` on), mirroring the decoder's masking */
+  private def nC(map: Array[Int], per: Int, mbW: Int, sliceStart: Int,
+      gbx: Int, gby: Int): Int = {
+    val stride = mbW * per
+    val a = gbx > 0 && (gby / per) * mbW + (gbx - 1) / per >= sliceStart
+    val b = gby > 0 && ((gby - 1) / per) * mbW + gbx / per >= sliceStart
+    if (a && b) (map(gby * stride + gbx - 1) + map((gby - 1) * stride + gbx) + 1) >> 1
+    else if (a) map(gby * stride + gbx - 1)
+    else if (b) map((gby - 1) * stride + gbx)
+    else 0
+  }
+
+  /** chroma residual of MB (mbX, mbY) against the 8x8 predictions:
+    * per plane, four 4x4 forward transforms with clamped AC levels
+    * into `ac(c)(b)` and the DC terms through the forward 2x2 Hadamard
+    * and quant into `dc(c)`. Returns the coded_block_pattern chroma
+    * (2 any AC, 1 DC only, 0 none). */
+  private def chromaResidual(srcCb: Array[Int], srcCr: Array[Int],
+      predCb: Array[Int], predCr: Array[Int], sc: Int, mbX: Int, mbY: Int,
+      qpc: Int, dc: Array[Array[Int]], ac: Array[Array[Array[Int]]]): Int = {
+    var anyAc = false
+    var anyDc = false
+    var c = 0
+    while (c < 2) {
+      val src = if (c == 0) srcCb else srcCr
+      val pred = if (c == 0) predCb else predCr
+      val wdc = new Array[Int](4)
+      var b = 0
+      while (b < 4) {
+        val res = new Array[Int](16)
+        var i = 0
+        while (i < 16) {
+          val px = (b % 2) * 4 + i % 4
+          val py = (b / 2) * 4 + i / 4
+          res(i) = src((mbY * 8 + py) * sc + mbX * 8 + px) - pred(py * 8 + px)
+          i += 1
+        }
+        val wc = Transform.forward4x4(res)
+        wdc(b) = wc(0)
+        val lev = new Array[Int](16)
+        i = 1
+        while (i < 16) {
+          lev(i) = Transform.quantAc(wc(i), qpc, i / 4, i % 4)
+          i += 1
+        }
+        clampCoeffs(lev)
+        if (lev.exists(_ != 0)) anyAc = true
+        ac(c)(b) = lev
+        b += 1
+      }
+      val f = Array(
+        wdc(0) + wdc(1) + wdc(2) + wdc(3),
+        wdc(0) - wdc(1) + wdc(2) - wdc(3),
+        wdc(0) + wdc(1) - wdc(2) - wdc(3),
+        wdc(0) - wdc(1) - wdc(2) + wdc(3))
+      var i = 0
+      while (i < 4) {
+        dc(c)(i) = Transform.quantChromaDc(f(i), qpc)
+        if (dc(c)(i) != 0) anyDc = true
+        i += 1
+      }
+      c += 1
+    }
+    if (anyAc) 2 else if (anyDc) 1 else 0
+  }
+
+  /** CAVLC chroma of one coded MB: both planes' DC blocks when
+    * `cbpChroma` != 0, then every AC block when `cbpChroma` == 2. Each
+    * AC block's TotalCoeff (0 when not coded) goes into `nzCb` / `nzCr`
+    * for later nC lookups. */
+  private def writeChroma(w: BitWriter, cbpChroma: Int,
+      dc: Array[Array[Int]], ac: Array[Array[Array[Int]]],
+      nzCb: Array[Int], nzCr: Array[Int], mbW: Int, sliceStart: Int,
+      mbX: Int, mbY: Int): Unit = {
+    if (cbpChroma != 0) {
+      Cavlc.writeBlock(w, -1, 4, dc(0))
+      Cavlc.writeBlock(w, -1, 4, dc(1))
+    }
+    var c = 0
+    while (c < 2) {
+      val map = if (c == 0) nzCb else nzCr
+      var b = 0
+      while (b < 4) {
+        val gbx = mbX * 2 + b % 2
+        val gby = mbY * 2 + b / 2
+        if (cbpChroma == 2) {
+          val scan = new Array[Int](15)
+          var j = 0
+          while (j < 15) {
+            scan(j) = ac(c)(b)(Transform.ZigZag4x4(j + 1))
+            j += 1
+          }
+          map(gby * mbW * 2 + gbx) = Cavlc.writeBlock(w,
+            nC(map, 2, mbW, sliceStart, gbx, gby), 15, scan)
+        } else map(gby * mbW * 2 + gbx) = 0
+        b += 1
+      }
+      c += 1
+    }
+  }
+
   /** Encode one frame as an IDR AVCC sample. `pcmEvery` > 0 makes
     * every n-th MB I_PCM (losslessly carrying the source pixels).
     * `mbPerSlice` > 0 starts a new slice every that many MBs (the
@@ -370,23 +453,6 @@ object Encoder {
     var w: BitWriter = null
     val writers = Seq.newBuilder[BitWriter]
     var sliceStart = 0
-
-    def lumaNc(gbx: Int, gby: Int): Int = {
-      val a = gbx > 0 && (gby / 4) * mbW + (gbx - 1) / 4 >= sliceStart
-      val b = gby > 0 && ((gby - 1) / 4) * mbW + gbx / 4 >= sliceStart
-      if (a && b) (nzY(gby * mbW * 4 + gbx - 1) + nzY((gby - 1) * mbW * 4 + gbx) + 1) >> 1
-      else if (a) nzY(gby * mbW * 4 + gbx - 1)
-      else if (b) nzY((gby - 1) * mbW * 4 + gbx)
-      else 0
-    }
-    def chromaNc(map: Array[Int], gbx: Int, gby: Int): Int = {
-      val a = gbx > 0 && (gby / 2) * mbW + (gbx - 1) / 2 >= sliceStart
-      val b = gby > 0 && ((gby - 1) / 2) * mbW + gbx / 2 >= sliceStart
-      if (a && b) (map(gby * mbW * 2 + gbx - 1) + map((gby - 1) * mbW * 2 + gbx) + 1) >> 1
-      else if (a) map(gby * mbW * 2 + gbx - 1)
-      else if (b) map((gby - 1) * mbW * 2 + gbx)
-      else 0
-    }
 
     val qpc = Transform.chromaQp(qp, pps.chromaQpOffset)
     var mbIdx = 0
@@ -526,59 +592,12 @@ object Encoder {
           }
         }
 
-        // chroma forward transforms
         val cDcLevels = Array.ofDim[Int](2, 4)
         val cAcLevels = Array.ofDim[Array[Int]](2, 4)
-        var anyCAc = false
-        var anyCDc = false
-        var c = 0
-        while (c < 2) {
-          val src = if (c == 0) srcCb else srcCr
-          val pred = if (c == 0) bestPredCb else bestPredCr
-          val wdc = new Array[Int](4)
-          var b = 0
-          while (b < 4) {
-            val bx0 = mbX * 8 + (b % 2) * 4
-            val by0 = mbY * 8 + (b / 2) * 4
-            val res = new Array[Int](16)
-            var i = 0
-            while (i < 16) {
-              val px = bx0 + i % 4
-              val py = by0 + i / 4
-              res(i) = src(py * sc + px) -
-                pred((py - mbY * 8) * 8 + (px - mbX * 8))
-              i += 1
-            }
-            val wc = Transform.forward4x4(res)
-            wdc(b) = wc(0)
-            val lev = new Array[Int](16)
-            i = 1
-            while (i < 16) {
-              lev(i) = Transform.quantAc(wc(i), qpc, i / 4, i % 4)
-              i += 1
-            }
-            clampCoeffs(lev)
-            if (lev.exists(_ != 0)) anyCAc = true
-            cAcLevels(c)(b) = lev
-            b += 1
-          }
-          // forward 2x2 Hadamard
-          val f = Array(
-            wdc(0) + wdc(1) + wdc(2) + wdc(3),
-            wdc(0) - wdc(1) + wdc(2) - wdc(3),
-            wdc(0) + wdc(1) - wdc(2) - wdc(3),
-            wdc(0) - wdc(1) - wdc(2) + wdc(3))
-          var i = 0
-          while (i < 4) {
-            cDcLevels(c)(i) = Transform.quantChromaDc(f(i), qpc)
-            if (cDcLevels(c)(i) != 0) anyCDc = true
-            i += 1
-          }
-          c += 1
-        }
+        val cbpChroma = chromaResidual(srcCb, srcCr, bestPredCb, bestPredCr,
+          sc, mbX, mbY, qpc, cDcLevels, cAcLevels)
 
         val cbpLuma = if (anyAc) 15 else 0
-        val cbpChroma = if (anyCAc) 2 else if (anyCDc) 1 else 0
         val mbType = 1 + bestMode + 4 * cbpChroma + (if (anyAc) 12 else 0)
         w.ue(mbType)
         w.ue(bestModeC)
@@ -591,7 +610,8 @@ object Encoder {
           dcScan(i) = dcLevels(Transform.ZigZag4x4(i))
           i += 1
         }
-        Cavlc.writeBlock(w, lumaNc(mbX * 4, mbY * 4), 16, dcScan)
+        Cavlc.writeBlock(w, nC(nzY, 4, mbW, sliceStart, mbX * 4, mbY * 4), 16,
+          dcScan)
         // luma AC
         k = 0
         while (k < 16) {
@@ -605,40 +625,14 @@ object Encoder {
               scan(j) = acLevels(k)(Transform.ZigZag4x4(j + 1))
               j += 1
             }
-            val tc = Cavlc.writeBlock(w, lumaNc(gbx, gby), 15, scan)
+            val tc = Cavlc.writeBlock(w, nC(nzY, 4, mbW, sliceStart, gbx, gby),
+              15, scan)
             nzY(gby * mbW * 4 + gbx) = tc
           } else nzY(gby * mbW * 4 + gbx) = 0
           k += 1
         }
-        // chroma DC then AC
-        if (cbpChroma != 0) {
-          c = 0
-          while (c < 2) {
-            Cavlc.writeBlock(w, -1, 4, cDcLevels(c))
-            c += 1
-          }
-        }
-        c = 0
-        while (c < 2) {
-          val map = if (c == 0) nzCb else nzCr
-          var b = 0
-          while (b < 4) {
-            val gbx = mbX * 2 + b % 2
-            val gby = mbY * 2 + b / 2
-            if (cbpChroma == 2) {
-              val scan = new Array[Int](15)
-              var j = 0
-              while (j < 15) {
-                scan(j) = cAcLevels(c)(b)(Transform.ZigZag4x4(j + 1))
-                j += 1
-              }
-              val tc = Cavlc.writeBlock(w, chromaNc(map, gbx, gby), 15, scan)
-              map(gby * mbW * 2 + gbx) = tc
-            } else map(gby * mbW * 2 + gbx) = 0
-            b += 1
-          }
-          c += 1
-        }
+        writeChroma(w, cbpChroma, cDcLevels, cAcLevels, nzCb, nzCr, mbW,
+          sliceStart, mbX, mbY)
 
         // ---- reconstruct (must mirror the decoder exactly) ----
         val dcRaster = new Array[Int](16)
@@ -666,7 +660,7 @@ object Encoder {
           }
           k += 1
         }
-        c = 0
+        var c = 0
         while (c < 2) {
           val rec = if (c == 0) recCb else recCr
           val pred = if (c == 0) bestPredCb else bestPredCr
@@ -719,7 +713,7 @@ object Encoder {
     * the single constant quarter-pel MV `mv` (residual = src − MC(ref))
     * or P_Skip where the residual quantizes to zero AND `mv` equals the
     * 8.4.1.1 skip MV. `ref` must be the DECODER's post-deblock output
-    * for the previous frame — [[mp4Gop]] maintains that invariant by
+    * for the previous frame — [[mp4GopMulti]] maintains that invariant by
     * decoding each emitted sample, so encode recon == decode recon by
     * construction (no duplicated deblock/bS logic). */
   def encodePFrame(f: Frame, ref: Decoder.Yuv, qp: Int, frameNum: Int,
@@ -764,22 +758,6 @@ object Encoder {
     val writers = Seq.newBuilder[BitWriter]
     var sliceStart = 0
 
-    def lumaNc(gbx: Int, gby: Int): Int = {
-      val a = gbx > 0 && (gby / 4) * mbW + (gbx - 1) / 4 >= sliceStart
-      val b = gby > 0 && ((gby - 1) / 4) * mbW + gbx / 4 >= sliceStart
-      if (a && b) (nzY(gby * bCols + gbx - 1) + nzY((gby - 1) * bCols + gbx) + 1) >> 1
-      else if (a) nzY(gby * bCols + gbx - 1)
-      else if (b) nzY((gby - 1) * bCols + gbx)
-      else 0
-    }
-    def chromaNc(map: Array[Int], gbx: Int, gby: Int): Int = {
-      val a = gbx > 0 && (gby / 2) * mbW + (gbx - 1) / 2 >= sliceStart
-      val b = gby > 0 && ((gby - 1) / 2) * mbW + gbx / 2 >= sliceStart
-      if (a && b) (map(gby * mbW * 2 + gbx - 1) + map((gby - 1) * mbW * 2 + gbx) + 1) >> 1
-      else if (a) map(gby * mbW * 2 + gbx - 1)
-      else if (b) map((gby - 1) * mbW * 2 + gbx)
-      else 0
-    }
     def fillMvMb(mbX: Int, mbY: Int, refIdx: Int, mx: Int,
         my: Int): Unit = {
       var by = mbY * 4
@@ -875,54 +853,10 @@ object Encoder {
         k += 1
       }
 
-      // chroma residual: DC 2x2 Hadamard + AC
       val cDcLevels = Array.ofDim[Int](2, 4)
       val cAcLevels = Array.ofDim[Array[Int]](2, 4)
-      var anyCAc = false
-      var anyCDc = false
-      var c = 0
-      while (c < 2) {
-        val src = if (c == 0) srcCb else srcCr
-        val pred = if (c == 0) predCb else predCr
-        val wdc = new Array[Int](4)
-        var b = 0
-        while (b < 4) {
-          val res = new Array[Int](16)
-          var i = 0
-          while (i < 16) {
-            val px = (b % 2) * 4 + i % 4
-            val py = (b / 2) * 4 + i / 4
-            res(i) = src((mbY * 8 + py) * sc + mbX * 8 + px) -
-              pred(py * 8 + px)
-            i += 1
-          }
-          val wc = Transform.forward4x4(res)
-          wdc(b) = wc(0)
-          val lev = new Array[Int](16)
-          i = 1
-          while (i < 16) {
-            lev(i) = Transform.quantAc(wc(i), qpc, i / 4, i % 4)
-            i += 1
-          }
-          clampCoeffs(lev)
-          if (lev.exists(_ != 0)) anyCAc = true
-          cAcLevels(c)(b) = lev
-          b += 1
-        }
-        val fh = Array(
-          wdc(0) + wdc(1) + wdc(2) + wdc(3),
-          wdc(0) - wdc(1) + wdc(2) - wdc(3),
-          wdc(0) + wdc(1) - wdc(2) - wdc(3),
-          wdc(0) - wdc(1) - wdc(2) + wdc(3))
-        var i = 0
-        while (i < 4) {
-          cDcLevels(c)(i) = Transform.quantChromaDc(fh(i), qpc)
-          if (cDcLevels(c)(i) != 0) anyCDc = true
-          i += 1
-        }
-        c += 1
-      }
-      val cbpChroma = if (anyCAc) 2 else if (anyCDc) 1 else 0
+      val cbpChroma = chromaResidual(srcCb, srcCr, predCb, predCr, sc, mbX,
+        mbY, qpc, cDcLevels, cAcLevels)
       val cbp = cbpLuma | (cbpChroma << 4)
 
       val (skipX, skipY) = MotionPred.skipMv(refGrid, mvxGrid, mvyGrid,
@@ -959,39 +893,14 @@ object Encoder {
               scan(j) = acLevels(k)(Transform.ZigZag4x4(j))
               j += 1
             }
-            val tc = Cavlc.writeBlock(w, lumaNc(gbx, gby), 16, scan)
+            val tc = Cavlc.writeBlock(w, nC(nzY, 4, mbW, sliceStart, gbx, gby),
+              16, scan)
             nzY(gby * bCols + gbx) = tc
           } else nzY(gby * bCols + gbx) = 0
           k += 1
         }
-        if (cbpChroma != 0) {
-          c = 0
-          while (c < 2) {
-            Cavlc.writeBlock(w, -1, 4, cDcLevels(c))
-            c += 1
-          }
-        }
-        c = 0
-        while (c < 2) {
-          val map = if (c == 0) nzCb else nzCr
-          var b = 0
-          while (b < 4) {
-            val gbx = mbX * 2 + b % 2
-            val gby = mbY * 2 + b / 2
-            if (cbpChroma == 2) {
-              val scan = new Array[Int](15)
-              var j = 0
-              while (j < 15) {
-                scan(j) = cAcLevels(c)(b)(Transform.ZigZag4x4(j + 1))
-                j += 1
-              }
-              val tc = Cavlc.writeBlock(w, chromaNc(map, gbx, gby), 15, scan)
-              map(gby * mbW * 2 + gbx) = tc
-            } else map(gby * mbW * 2 + gbx) = 0
-            b += 1
-          }
-          c += 1
-        }
+        writeChroma(w, cbpChroma, cDcLevels, cAcLevels, nzCb, nzCr, mbW,
+          sliceStart, mbX, mbY)
       }
       mbIdx += 1
     }
@@ -1001,38 +910,24 @@ object Encoder {
 
   /** avc1 MP4 with a GOP structure: frame i with i % gop == 0 is an
     * IDR (intra, marked sync in stss), others are P frames at
-    * `mvFor(i)`. Reference maintenance decodes each emitted sample with
-    * the REAL decoder, so drift between encoder assumptions and decoder
-    * behavior is structurally impossible. */
+    * `mvFor(i)` against the previous picture — [[mp4GopMulti]] with a
+    * one-picture DPB. */
   def mp4Gop(frames: Seq[Frame], qp: Int, fps: Int, gop: Int,
       mvFor: Int => (Int, Int) = _ => (0, 0),
-      deblock: Boolean = true, mbPerSlice: Int = 0): Array[Byte] = {
-    require(frames.nonEmpty && gop >= 1)
-    val f0 = frames.head
-    val sps = spsFor(f0.width, f0.height)
-    val pps = ppsFor(qp)
-    val cfg = Decoder.AvcConfig(sps, pps, 4)
-    var ref: Decoder.Yuv = null
-    val samples = frames.zipWithIndex.map { case (f, i) =>
-      require(f.width == f0.width && f.height == f0.height, "mixed dims")
-      val s =
-        if (i % gop == 0) encodeFrame(f, qp, 0, i, deblock, mbPerSlice)
-        else encodePFrame(f, ref, qp, frameNum = i % gop, mvFor(i),
-          deblock, mbPerSlice)
-      ref = Decoder.decode(s, cfg, ref)
-      s
-    }
-    Mp4Samples.encodeFrames(samples, codec = "avc1", fps = fps,
-      width = f0.width, height = f0.height, syncEvery = gop,
-      sampleEntryExtension = avccBox(sps, pps))
-  }
+      deblock: Boolean = true, mbPerSlice: Int = 0): Array[Byte] =
+    mp4GopMulti(frames, qp, fps, gop, numRefs = 1, mvFor, deblock,
+      mbPerSlice)
 
-  /** avc1 MP4 with a GOP structure AND a multi-picture DPB: as
-    * [[mp4Gop]], but P frames reference up to `numRefs` previously
-    * decoded pictures (sliding window, most recent first — the list-0
-    * initialization order) with per-MB min-SAD ref_idx selection. The
-    * SPS declares max_num_ref_frames = numRefs, so a decoder's GOP
-    * walk must maintain the same window to resolve every ref_idx. */
+  /** avc1 MP4 with a GOP structure AND a multi-picture DPB: frame i
+    * with i % gop == 0 is an IDR (intra, marked sync in stss), others
+    * are P frames at `mvFor(i)` that reference up to `numRefs`
+    * previously decoded pictures (sliding window, most recent first —
+    * the list-0 initialization order) with per-MB min-SAD ref_idx
+    * selection. Reference maintenance decodes each emitted sample with
+    * the REAL decoder, so drift between encoder assumptions and decoder
+    * behavior is structurally impossible. The SPS declares
+    * max_num_ref_frames = numRefs, so a decoder's GOP walk must
+    * maintain the same window to resolve every ref_idx. */
   def mp4GopMulti(frames: Seq[Frame], qp: Int, fps: Int, gop: Int,
       numRefs: Int, mvFor: Int => (Int, Int) = _ => (0, 0),
       deblock: Boolean = true, mbPerSlice: Int = 0): Array[Byte] = {

@@ -185,7 +185,7 @@ object H264Fixtures {
       samplesPerFragment = 4)
   }
 
-  private def deltaLevel(d: Long): Int = 1 + (d % 2).toInt
+  private[h264] def deltaLevel(d: Long): Int = 1 + (d % 2).toInt
 
   private def pDeltaFrame(d: Long, f: Int, qp: Int, sps: Sps): Array[Byte] = {
     val lp = deltaLevel(d)
@@ -240,22 +240,6 @@ object H264Fixtures {
     w.se(mvx); w.se(mvy) // mvd = mv (mvp = (0,0))
     w.ue(Decoder.codeNumFromCbpInter(0)) // cbp 0
     Encoder.avccSampleP(w)
-  }
-
-  /** closed-form plane sums for [[videoGop]] frames: the g==0 IDR is
-    * the kind-1 arithmetic; P frames add the uniform luma delta once
-    * (g>=1) and otherwise copy. */
-  def expectedSumsGop(d: Long, f: Int): (Long, Long, Long) = {
-    val g = f % 4
-    val (ys, cbs, crs) = i16Sums(d, f - g)
-    if (g == 0) (ys, cbs, crs)
-    else {
-      val qp = qpFor(d)
-      val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-      val r = (((deltaLevel(d) * v) << (qp / 6)) + 32) >> 6
-      val yv = math.max(0, math.min(255, (ys / 256).toInt + r))
-      (256L * yv, cbs, crs)
-    }
   }
 
   /** MULTI-REFERENCE avc1 fixture (mm18): 16x16 single-MB GOPs where
@@ -351,24 +335,6 @@ object H264Fixtures {
     Encoder.avccSampleP(w)
   }
 
-  /** closed-form plane sums for [[videoMultiRef]] frames */
-  def expectedSumsMultiRef(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    val fi = f - f % 4
-    def clip(x: Int) = math.max(0, math.min(255, x))
-    val la = 1 + ((d + fi) % 5).toInt
-    val dc =
-      if (qp >= 36) (la * v) << (qp / 6 - 6)
-      else (la * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-    val ia = clip(128 + ((dc + 32) >> 6))
-    val yv = (f % 4) match {
-      case 0 | 2 => ia
-      case _ => multiRefPcmVal(d, fi)
-    }
-    (256L * yv, 64L * 128L, 64L * 128L)
-  }
-
   /** B-FRAME avc1 fixture (mm20): decode-order triads [IDR, P, B]
     * displayed as [IDR, B, P] via ctts (+1000/+2000/0 — the classic
     * one-frame reorder delay). The B is a NON-REFERENCE picture
@@ -452,31 +418,6 @@ object H264Fixtures {
       compositionOffsets = ctts)
   }
 
-  /** closed-form plane sums for [[videoB]] frames — `f` is the
-    * DISPLAY index (triad order IDR, B, P) */
-  def expectedSumsB(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    def clip(x: Int) = math.max(0, math.min(255, x))
-    val t = f / 3
-    val la = 1 + ((d + 3 * t) % 5).toInt
-    val dc =
-      if (qp >= 36) (la * v) << (qp / 6 - 6)
-      else (la * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-    val ia = clip(128 + ((dc + 32) >> 6))
-    val vb = multiRefPcmVal(d, 3 * t)
-    val yv = (f % 3) match {
-      case 0 => ia
-      case 2 => vb // display position 2 is the P picture
-      case _ => (t % 4) match { // display position 1 is the B
-        case 0 => ia
-        case 1 => vb
-        case _ => (ia + vb + 1) >> 1
-      }
-    }
-    (256L * yv, 64L * 128L, 64L * 128L)
-  }
-
   /** WEIGHTED-PREDICTION avc1 fixture (mm19): 16x16 single-MB GOPs
     * where the PPS carries weighted_pred_flag and every odd frame is a
     * P-slice COPY of the IDR through an explicit pred_weight_table —
@@ -516,26 +457,6 @@ object H264Fixtures {
     20 + (d % 25).toInt, (d % 11).toInt - 5,
     56 + (d % 16).toInt, (d % 7).toInt - 3,
     56 + ((2 * d) % 16).toInt, (d % 5).toInt - 2)
-
-  /** closed-form plane sums for [[videoWeighted]] frames */
-  def expectedSumsWeighted(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    def clip(x: Int) = math.max(0, math.min(255, x))
-    val la = 1 + ((d + (f - f % 2)) % 5).toInt
-    val dc =
-      if (qp >= 36) (la * v) << (qp / 6 - 6)
-      else (la * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-    val ia = clip(128 + ((dc + 32) >> 6))
-    if (f % 2 == 0) (256L * ia, 64L * 128L, 64L * 128L)
-    else {
-      val (wy, oy, wcb, ocb, wcr, ocr) = weightedParams(d)
-      val yv = clip(((ia * wy + 16) >> 5) + oy)
-      val cbv = clip(((128 * wcb + 32) >> 6) + ocb)
-      val crv = clip(((128 * wcr + 32) >> 6) + ocr)
-      (256L * yv, 64L * cbv, 64L * crv)
-    }
-  }
 
   /** MULTI-SLICE avc1 fixture (mm17): 32x16 pictures of two MBs, one
     * slice per MB — the encoder-parallelism layout of real streams.
@@ -608,26 +529,6 @@ object H264Fixtures {
     Mp4Samples.encodeFrames(samples, codec = "avc1", fps = 10,
       width = 32, height = 16, syncEvery = 2,
       sampleEntryExtension = Encoder.avccBox(sps, pps))
-  }
-
-  /** closed-form plane sums for [[videoSlices]] frames */
-  def expectedSumsSlices(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    def clip(x: Int) = math.max(0, math.min(255, x))
-    def i16Val(l: Int): Int = {
-      val dc =
-        if (qp >= 36) (l * v) << (qp / 6 - 6)
-        else (l * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-      clip(128 + ((dc + 32) >> 6))
-    }
-    val fIdr = f - f % 2
-    val la = 1 + ((d + fIdr) % 5).toInt
-    val lb = 1 + ((d + 2 * fIdr) % 5).toInt
-    val r = (((deltaLevel(d) * v) << (qp / 6)) + 32) >> 6
-    val v0 = i16Val(la)
-    val v1 = if (f % 2 == 0) i16Val(lb) else clip(i16Val(lb) + r)
-    (256L * (v0 + v1), 128L * 128L, 128L * 128L)
   }
 
   /** EXPLICIT-WEIGHTED-BIPRED avc1 fixture (mm19 extension):
@@ -721,49 +622,6 @@ object H264Fixtures {
     56 + ((3 * d) % 16).toInt, ((2 * d) % 7).toInt - 3,
     56 + ((5 * d) % 16).toInt, ((3 * d) % 5).toInt - 2)
 
-  /** closed-form plane sums for [[videoWeightedB]] — `f` is the
-    * DISPLAY index (triad order IDR, B, P) */
-  def expectedSumsWeightedB(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    def clip(x: Int) = math.max(0, math.min(255, x))
-    val t = f / 3
-    val la = 1 + ((d + 3 * t) % 5).toInt
-    val dc =
-      if (qp >= 36) (la * v) << (qp / 6 - 6)
-      else (la * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-    val ia = clip(128 + ((dc + 32) >> 6))
-    val vb = multiRefPcmVal(d, 3 * t)
-    val p = weightedBParams(d)
-    val (w0y, o0y, w1y, o1y) = (p._1, p._2, p._3, p._4)
-    val (w0cb, o0cb, w0cr, o0cr) = (p._5, p._6, p._7, p._8)
-    val (w1cb, o1cb, w1cr, o1cr) = (p._9, p._10, p._11, p._12)
-    (f % 3) match {
-      case 0 => (256L * ia, 64L * 128L, 64L * 128L)
-      case 2 => (256L * vb, 64L * 128L, 64L * 128L)
-      case _ => (t % 3) match {
-        case 0 =>
-          val yv = clip(((ia * w0y + vb * w1y + 32) >> 6) +
-            ((o0y + o1y + 1) >> 1))
-          val cbv = clip(((128 * w0cb + 128 * w1cb + 64) >> 7) +
-            ((o0cb + o1cb + 1) >> 1))
-          val crv = clip(((128 * w0cr + 128 * w1cr + 64) >> 7) +
-            ((o0cr + o1cr + 1) >> 1))
-          (256L * yv, 64L * cbv, 64L * crv)
-        case 1 =>
-          val yv = clip(((ia * w0y + 16) >> 5) + o0y)
-          val cbv = clip(((128 * w0cb + 32) >> 6) + o0cb)
-          val crv = clip(((128 * w0cr + 32) >> 6) + o0cr)
-          (256L * yv, 64L * cbv, 64L * crv)
-        case _ =>
-          val yv = clip(((vb * w1y + 16) >> 5) + o1y)
-          val cbv = clip(((128 * w1cb + 32) >> 6) + o1cb)
-          val crv = clip(((128 * w1cr + 32) >> 6) + o1cr)
-          (256L * yv, 64L * cbv, 64L * crv)
-      }
-    }
-  }
-
   /** IMPLICIT-WEIGHTED-BIPRED avc1 fixture (weighted_bipred_idc 2,
     * 8.4.2.3.1): triads [IDR poc 0, P poc 6, B poc 2] — the B sits
     * OFF-CENTER between its references, so the POC-derived weights
@@ -818,27 +676,6 @@ object H264Fixtures {
       compositionOffsets = ctts)
   }
 
-  /** closed-form plane sums for [[videoImplicitB]] — `f` is the
-    * DISPLAY index (triad order IDR, B, P) */
-  def expectedSumsImplicitB(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    def clip(x: Int) = math.max(0, math.min(255, x))
-    val t = f / 3
-    val la = 1 + ((d + 3 * t) % 5).toInt
-    val dc =
-      if (qp >= 36) (la * v) << (qp / 6 - 6)
-      else (la * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-    val ia = clip(128 + ((dc + 32) >> 6))
-    val vb = multiRefPcmVal(d, 3 * t)
-    val yv = (f % 3) match {
-      case 0 => ia
-      case 2 => vb
-      case _ => clip((ia * 43 + vb * 21 + 32) >> 6) // w0 43, w1 21
-    }
-    (256L * yv, 64L * 128L, 64L * 128L)
-  }
-
   /** REF_PIC_LIST_MODIFICATION avc1 fixture (mm18 extension,
     * 8.2.4.3): GOPs of 4 over a 2-picture sliding window where the
     * copy P slices run with ONE active reference and pull their
@@ -877,25 +714,6 @@ object H264Fixtures {
     Mp4Samples.encodeFrames(samples, codec = "avc1", fps = 10,
       width = 16, height = 16, syncEvery = 4,
       sampleEntryExtension = Encoder.avccBox(sps, pps))
-  }
-
-  /** closed-form plane sums for [[videoModList]] frames */
-  def expectedSumsModList(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    def clip(x: Int) = math.max(0, math.min(255, x))
-    val fi = f - f % 4
-    val la = 1 + ((d + fi) % 5).toInt
-    val dc =
-      if (qp >= 36) (la * v) << (qp / 6 - 6)
-      else (la * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-    val ia = clip(128 + ((dc + 32) >> 6))
-    val vb = multiRefPcmVal(d, fi)
-    val yv = (f % 4) match {
-      case 0 | 2 => ia
-      case _ => vb
-    }
-    (256L * yv, 64L * 128L, 64L * 128L)
   }
 
   /** MMCO avc1 fixture (mm18 extension, 8.2.5.4): GOPs of 5 where
@@ -978,71 +796,5 @@ object H264Fixtures {
     Mp4Samples.encodeFrames(samples, codec = "avc1", fps = 10,
       width = 16, height = 16, syncEvery = 5,
       sampleEntryExtension = Encoder.avccBox(sps, pps))
-  }
-
-  /** closed-form plane sums for [[videoMmco]] frames (variants 0/1
-    * decode identically — MMCO 1/3 are DPB protocol, not a pixel
-    * transform; variant 2's reset re-targets g3/g4 onto the rebased
-    * P2) */
-  def expectedSumsMmco(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    def clip(x: Int) = math.max(0, math.min(255, x))
-    val fi = f - f % 5
-    val la = 1 + ((d + fi) % 5).toInt
-    val dc =
-      if (qp >= 36) (la * v) << (qp / 6 - 6)
-      else (la * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-    val ia = clip(128 + ((dc + 32) >> 6))
-    val yv = (f % 5) match {
-      case 0 => ia
-      case 1 => multiRefPcmVal(d, fi + 1)
-      case 2 => multiRefPcmVal(d, fi + 2)
-      case _ => if (d % 3 == 2) multiRefPcmVal(d, fi + 2) else ia
-    }
-    (256L * yv, 64L * 128L, 64L * 128L)
-  }
-
-  /** kind-1 (I_16x16 uniform) closed-form plane sums, shared by
-    * [[expectedSums]] and the GOP oracle. */
-  private def i16Sums(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    def clip(v: Int) = math.max(0, math.min(255, v))
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    val ly = 1 + ((d + f) % 5).toInt
-    val dc =
-      if (qp >= 36) (ly * v) << (qp / 6 - 6)
-      else (ly * v + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-    val yv = clip(128 + ((dc + 32) >> 6))
-    val qpc = Transform.chromaQp(qp, 0)
-    val vc = Array(10, 11, 13, 14, 16, 18)(qpc % 6)
-    def cval(l: Int) = {
-      val dcc = ((l * vc) << (qpc / 6)) >> 5
-      clip(128 + ((dcc + 32) >> 6))
-    }
-    (256L * yv, 64L * cval(((d + f) % 3).toInt),
-      64L * cval(((d + 2 * f) % 3).toInt))
-  }
-
-  /** closed-form expected plane sums (what the DuckDB oracle computes);
-    * used by H264Spec to pin the decoder to the analytic truth. */
-  def expectedSums(d: Long, f: Int): (Long, Long, Long) = {
-    val qp = qpFor(d)
-    def clip(v: Int) = math.max(0, math.min(255, v))
-    val v = Array(10, 11, 13, 14, 16, 18)(qp % 6)
-    (f % 3) match {
-      case 0 =>
-        var ys = 0L; var cbs = 0L; var crs = 0L
-        (0 until 256).foreach(i => ys += (d * 31 + f * 53 + i * 7) % 251)
-        (0 until 64).foreach(i => cbs += (d * 29 + f * 47 + i * 11) % 251)
-        (0 until 64).foreach(i => crs += (d * 23 + f * 41 + i * 13) % 251)
-        (ys, cbs, crs)
-      case 1 => i16Sums(d, f)
-      case _ =>
-        val l2 = 1 + ((d * 3 + f) % 5).toInt
-        val d0 = (l2 * v) << (qp / 6)
-        val v0 = clip(128 + ((d0 + 32) >> 6))
-        (256L * v0, 64L * 128L, 64L * 128L)
-    }
   }
 }

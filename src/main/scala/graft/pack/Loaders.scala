@@ -133,10 +133,4 @@ object Loaders {
       value.as("value"),
       col("image_info.image_name").as("media_paths"))
   }
-
-  /** hf-dataset-style parquet with column pruning
-    * (`dataset_loader.py:38-48`). */
-  def loadParquet(spark: SparkSession, path: String,
-      columns: Seq[String]): DataFrame =
-    spark.read.parquet(path).select(columns.map(col): _*)
 }

@@ -39,27 +39,13 @@ object CurationQueries extends QueryRegistry {
     * use 8–13-word grams; the fixture's documents are 10–99 words with
     * near-dup families that share 5-word runs, so 5 keeps both queries'
     * outputs non-degenerate at test scale. */
-  private val GramK = 5
+  private[queries] val GramK = 5
 
   /** Eval-set membership: doc_id % 7 == 0 (a held-out slice with
     * measured overlap against the rest of the fixture). */
   private val EvalMod = 7
 
   private def words(c: Column): Column = split(lower(c), " ")
-
-  /** Distinct k-word shingles, md5-truncated to 16 hex chars — the only
-    * payload that ever enters a shuffle here. This declarative form is
-    * the spec cross-check ([[exploded]] is the production path: md5
-    * inside a Catalyst HOF runs interpreted, ~10× the kernel's cost). */
-  private[queries] def shingleHashes(ws: Column): Column = {
-    val sh = when(size(ws) >= GramK,
-      transform(sequence(lit(1), size(ws) - (GramK - 1)), i =>
-        concat_ws(" ",
-          (0 until GramK).map(o => element_at(ws, i + o)): _*)))
-      .otherwise(array(concat_ws(" ", ws)))
-    array_distinct(transform(sh, x =>
-      substring(md5(to_binary(x, lit("utf-8"))), 1, 16)))
-  }
 
   private val shingleHashesSqlCte = {
     val parts = (0 until GramK)

@@ -218,20 +218,15 @@ object Gopen {
   private[wds] def shellQuote(s: String): String =
     "'" + s.replace("'", "'\\''") + "'"
 
-  /** Replace every `placeholder` in `template` with the shell-quoted
-    * `value`, absorbing any single/double quotes the template author
-    * already put immediately around the placeholder (`'{}'`, `"{}"`)
-    * so the substitution is always exactly one quoted shell word. */
-  private[wds] def substitute(
-      template: String, placeholder: String, value: String): String =
-    substituteAll(template, Seq(placeholder -> value))
-
   /** SIMULTANEOUS substitution of several placeholders: the template
     * is tokenized on the placeholders FIRST, then values are inserted
     * shell-quoted. Sequential `.replace` chains would re-scan already
     * substituted values — a shard path containing a literal `{}`
     * would have the full URL spliced into its own middle by the
-    * second pass. Values are data; they are never re-scanned. */
+    * second pass. Values are data; they are never re-scanned. Any
+    * single/double quotes the template author already put immediately
+    * around a placeholder (`'{}'`, `"{}"`) are absorbed, so each
+    * substitution is always exactly one quoted shell word. */
   private[wds] def substituteAll(template: String,
       subs: Seq[(String, String)]): String = {
     val absorbed = subs.foldLeft(template) { case (t, (p, _)) =>

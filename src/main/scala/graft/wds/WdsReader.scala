@@ -1,7 +1,7 @@
 package graft.wds
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Spark read path for WebDataset tar shards.
   *
@@ -148,11 +148,6 @@ object WdsReader {
         }
     }
   }
-
-  /** DataFrame view (key, url, entries) for relational-style use. */
-  def readDF(spark: SparkSession, spec: String,
-      opts: TarIO.ReadOptions = TarIO.ReadOptions()): DataFrame =
-    read(spark, spec, opts).toDF()
 }
 
 /** Minimal serializable Hadoop Configuration carrier (Spark's own

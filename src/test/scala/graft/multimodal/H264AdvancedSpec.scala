@@ -45,7 +45,7 @@ class H264AdvancedSpec extends AnyFunSuite {
       val mp4 = H264Fixtures.videoWeightedB(d, n)
       for (f <- 0 until n) {
         val got = channelSums(mp4, f)
-        val want = rgbSums(H264Fixtures.expectedSumsWeightedB(d, f))
+        val want = rgbSums(H264FixtureSums.expectedSumsWeightedB(d, f))
         assert(got == want, s"doc=$d display=$f")
       }
     }
@@ -55,9 +55,9 @@ class H264AdvancedSpec extends AnyFunSuite {
     // the gate would pass vacuously if every doc's weights degenerated
     // to the 32/32 average — prove the weighted bi frame differs
     val diffs = (0L until 12L).count { d =>
-      val ia = H264Fixtures.expectedSumsWeightedB(d, 0)._1 / 256
-      val vb = H264Fixtures.expectedSumsWeightedB(d, 2)._1 / 256
-      val weighted = H264Fixtures.expectedSumsWeightedB(d, 1)._1 / 256
+      val ia = H264FixtureSums.expectedSumsWeightedB(d, 0)._1 / 256
+      val vb = H264FixtureSums.expectedSumsWeightedB(d, 2)._1 / 256
+      val weighted = H264FixtureSums.expectedSumsWeightedB(d, 1)._1 / 256
       weighted != (ia + vb + 1) / 2
     }
     assert(diffs > 8)
@@ -69,7 +69,7 @@ class H264AdvancedSpec extends AnyFunSuite {
       val mp4 = H264Fixtures.videoImplicitB(d, n)
       for (f <- 0 until n) {
         val got = channelSums(mp4, f)
-        val want = rgbSums(H264Fixtures.expectedSumsImplicitB(d, f))
+        val want = rgbSums(H264FixtureSums.expectedSumsImplicitB(d, f))
         assert(got == want, s"doc=$d display=$f")
       }
     }
@@ -92,7 +92,7 @@ class H264AdvancedSpec extends AnyFunSuite {
       val mp4 = H264Fixtures.videoModList(d, n)
       for (f <- 0 until n) {
         val got = channelSums(mp4, f)
-        val want = rgbSums(H264Fixtures.expectedSumsModList(d, f))
+        val want = rgbSums(H264FixtureSums.expectedSumsModList(d, f))
         assert(got == want, s"doc=$d f=$f")
       }
     }
@@ -102,8 +102,8 @@ class H264AdvancedSpec extends AnyFunSuite {
     // g2 copies the IDR (ia) via PicNum 0; the initialized head is the
     // PCM P1 (vb). If ia == vb for every doc the gate is vacuous.
     val diffs = (0L until 12L).count { d =>
-      H264Fixtures.expectedSumsModList(d, 2)._1 !=
-        H264Fixtures.expectedSumsModList(d, 1)._1
+      H264FixtureSums.expectedSumsModList(d, 2)._1 !=
+        H264FixtureSums.expectedSumsModList(d, 1)._1
     }
     assert(diffs > 8)
   }
@@ -114,7 +114,7 @@ class H264AdvancedSpec extends AnyFunSuite {
       val mp4 = H264Fixtures.videoMmco(d, n)
       for (f <- 0 until n) {
         val got = channelSums(mp4, f)
-        val want = rgbSums(H264Fixtures.expectedSumsMmco(d, f))
+        val want = rgbSums(H264FixtureSums.expectedSumsMmco(d, f))
         assert(got == want, s"doc=$d f=$f (variant ${d % 3})")
       }
     }
@@ -129,7 +129,7 @@ class H264AdvancedSpec extends AnyFunSuite {
       val mp4 = H264Fixtures.videoMmco(d, n)
       for (f <- Seq(9, 3, 4, 13, 0, 7, 14, 1, 12, 2)) {
         val got = channelSums(mp4, f)
-        val want = rgbSums(H264Fixtures.expectedSumsMmco(d, f))
+        val want = rgbSums(H264FixtureSums.expectedSumsMmco(d, f))
         assert(got == want, s"doc=$d f=$f (variant ${d % 3})")
       }
     }
@@ -139,8 +139,8 @@ class H264AdvancedSpec extends AnyFunSuite {
     // g3 reads ref_idx 1: MMCO resolves it to the IDR (ia); a pure
     // sliding window resolves it to P1 (vb1)
     val diffs = (0L until 12L).count { d =>
-      H264Fixtures.expectedSumsMmco(d, 3)._1 !=
-        H264Fixtures.expectedSumsMmco(d, 1)._1
+      H264FixtureSums.expectedSumsMmco(d, 3)._1 !=
+        H264FixtureSums.expectedSumsMmco(d, 1)._1
     }
     assert(diffs > 8)
   }

@@ -157,7 +157,7 @@ class H264BSpec extends AnyFunSuite {
         val img = graft.wds.Codecs.decodeImage(
           FrameSource.Mp4Frames.frame(mp4, f))
         val rSum = img.data.grouped(3).map(p => (p(0) & 0xff).toLong).sum
-        val (ySum, _, _) = H264Fixtures.expectedSumsB(d, f)
+        val (ySum, _, _) = H264FixtureSums.expectedSumsB(d, f)
         assert(rSum == ySum, s"doc=$d display=$f")
       }
     }
@@ -172,7 +172,7 @@ class H264BSpec extends AnyFunSuite {
       val img = graft.wds.Codecs.decodeImage(
         FrameSource.Mp4Frames.frame(mp4, f))
       val rSum = img.data.grouped(3).map(p => (p(0) & 0xff).toLong).sum
-      assert(rSum == H264Fixtures.expectedSumsB(d, f)._1, s"f=$f")
+      assert(rSum == H264FixtureSums.expectedSumsB(d, f)._1, s"f=$f")
     }
     // keyframe types are display-order: I at display 0, 3, 6, 9
     assert(FrameSource.Mp4Frames.frameTypes(mp4) ==

@@ -385,7 +385,7 @@ class H264InterSpec extends AnyFunSuite {
         ref = yuv
         val got = (yuv.y.map(_.toLong).sum, yuv.cb.map(_.toLong).sum,
           yuv.cr.map(_.toLong).sum)
-        assert(got == H264Fixtures.expectedSumsGop(d, f), s"doc=$d f=$f")
+        assert(got == H264FixtureSums.expectedSumsGop(d, f), s"doc=$d f=$f")
       }
     }
   }

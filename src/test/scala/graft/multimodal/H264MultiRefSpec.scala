@@ -53,7 +53,7 @@ class H264MultiRefSpec extends AnyFunSuite {
         val yuv = decoded(f)
         val got = (yuv.y.map(_.toLong).sum, yuv.cb.map(_.toLong).sum,
           yuv.cr.map(_.toLong).sum)
-        assert(got == H264Fixtures.expectedSumsMultiRef(d, f),
+        assert(got == H264FixtureSums.expectedSumsMultiRef(d, f),
           s"doc=$d f=$f")
       }
     }
@@ -88,7 +88,7 @@ class H264MultiRefSpec extends AnyFunSuite {
     for (f <- Seq(n - 1, 2, 3, 7, 7, 0, 10, 1, 6)) {
       val img = graft.wds.Codecs.decodeImage(FrameSource.Mp4Frames.frame(mp4, f))
       val rSum = img.data.grouped(3).map(p => (p(0) & 0xff).toLong).sum
-      val (ySum, _, _) = H264Fixtures.expectedSumsMultiRef(d, f)
+      val (ySum, _, _) = H264FixtureSums.expectedSumsMultiRef(d, f)
       assert(rSum == ySum, s"f=$f")
     }
   }

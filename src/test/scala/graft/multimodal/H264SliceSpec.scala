@@ -210,7 +210,7 @@ class H264SliceSpec extends AnyFunSuite {
         ref = yuv
         val got = (yuv.y.map(_.toLong).sum, yuv.cb.map(_.toLong).sum,
           yuv.cr.map(_.toLong).sum)
-        assert(got == H264Fixtures.expectedSumsSlices(d, f), s"doc=$d f=$f")
+        assert(got == H264FixtureSums.expectedSumsSlices(d, f), s"doc=$d f=$f")
       }
     }
   }

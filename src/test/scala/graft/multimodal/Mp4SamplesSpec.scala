@@ -304,7 +304,7 @@ class Mp4SamplesSpec extends AnyFunSuite {
   }
 
   test("fragmented avc1 decodes identically to the stbl layout") {
-    import graft.multimodal.h264.{H264Fixtures, Decoder}
+    import graft.multimodal.h264.{H264FixtureSums, H264Fixtures, Decoder}
     val d = 11L
     val n = 9
     val plain = H264Fixtures.videoGop(d, n)
@@ -338,7 +338,7 @@ class Mp4SamplesSpec extends AnyFunSuite {
       ref = yuv
       val got = (yuv.y.map(_.toLong).sum, yuv.cb.map(_.toLong).sum,
         yuv.cr.map(_.toLong).sum)
-      assert(got == H264Fixtures.expectedSumsGop(d, f), s"f=$f")
+      assert(got == H264FixtureSums.expectedSumsGop(d, f), s"f=$f")
     }
   }
 }

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.queries.CurationQueries.GramK
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Laws for the curation suite (qd11/qd12/qs05) beyond the DuckDB gate:
@@ -11,6 +13,20 @@ class CurationSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private def q(name: String) =
     graft.SparkEntry.queries(name)(spark, sf)
+
+  /** Distinct k-word shingles, md5-truncated to 16 hex chars — the only
+    * payload that ever enters a shuffle in qd11. This declarative form is
+    * the cross-check of the production `ShingleHash` kernel (md5 inside a
+    * Catalyst HOF runs interpreted, ~10× the kernel's cost). */
+  private def shingleHashes(ws: Column): Column = {
+    val sh = when(size(ws) >= GramK,
+      transform(sequence(lit(1), size(ws) - (GramK - 1)), i =>
+        concat_ws(" ",
+          (0 until GramK).map(o => element_at(ws, i + o)): _*)))
+      .otherwise(array(concat_ws(" ", ws)))
+    array_distinct(transform(sh, x =>
+      substring(md5(to_binary(x, lit("utf-8"))), 1, 16)))
+  }
 
   test("qd11: eval docs are excluded and hits imply contamination") {
     val rows = q("qd11_decontam").collect()
@@ -153,7 +169,7 @@ class CurationSpec extends SparkSpec {
     val kernel = graft.functions.ShingleHash.exploded(docs, 5)
       .as[(Long, String)].collect().toSet
     val hof = docs.select($"doc_id",
-        explode(CurationQueries.shingleHashes(split(lower($"text"), " ")))
+        explode(shingleHashes(split(lower($"text"), " ")))
           .as("sh"))
       .as[(Long, String)].collect().toSet
     assert(kernel == hof)
