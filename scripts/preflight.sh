@@ -32,6 +32,17 @@ if grep -rnE "newBuilder\[Int\]|IndexedSeq\.fill|StringWriter" \
   exit 1
 fi
 
+# the check gate counts each bin with PackedJsonStats and builds no
+# arrays; the one from_json in graft.index is the inspection sample's,
+# which prints them.
+from_json_uses=$(grep -ro "from_json(" src/main/scala/graft/index | wc -l || true)
+if [ "$from_json_uses" -gt 1 ]; then
+  grep -rn "from_json(" src/main/scala/graft/index
+  echo "[preflight] $from_json_uses from_json( in graft.index — only" \
+    "CheckStage.inspectionSample may parse; the gate uses PackedJsonStats"
+  exit 1
+fi
+
 echo "[preflight] sbt compile (main + test)..."
 sbt -batch "compile; Test/compile" >/tmp/preflight_compile.log 2>&1 || {
   echo "[preflight] COMPILE FAILED — tail of log:"

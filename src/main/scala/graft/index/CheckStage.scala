@@ -15,11 +15,15 @@ import org.apache.spark.sql.types._
   * the five counts the invariants need, and the flags are DataFrame
   * predicates over those counts. At 100 TB this stays a single codegen'd
   * scan + one tiny groupBy(url) hash aggregation (A1/A2), with no id
-  * array ever built. Only the 1 % inspection dump, which prints the
-  * arrays, parses the entry with `from_json`. The gate and the dump
-  * parse separately; `PackedJsonStatsSpec` keeps them in agreement by
-  * checking every gate column against the same columns computed from
-  * the `from_json` arrays, row for row.
+  * array ever built. A bin as the tokenize stage writes it is counted
+  * on its UTF-8 bytes alone; any other entry is read by Jackson the way
+  * `from_json` reads it (the two readings are described on
+  * [[graft.functions.PackedJsonScanner]]). Only the 1 % inspection
+  * dump, which prints the arrays, parses the entry with `from_json`,
+  * and preflight fails on a second such call in this package. The gate
+  * and the dump parse separately; `PackedJsonStatsSpec` keeps them in
+  * agreement by checking every gate column against the same columns
+  * computed from the `from_json` arrays, row for row.
   */
 object CheckStage {
 

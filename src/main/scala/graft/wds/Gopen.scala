@@ -193,9 +193,21 @@ object Gopen {
       else {
         if (in.getPos != pos) in.seek(pos)
         val want = math.min(dst.remaining().toLong, length - pos).toInt
-        val buf = new Array[Byte](want)
-        val n = in.read(buf, 0, want)
-        if (n > 0) { dst.put(buf, 0, n); pos += n }
+        // a heap buffer (TarFile wraps its entry arrays) is read into
+        // in place; a direct one goes through a copy
+        val n =
+          if (dst.hasArray) {
+            val read =
+              in.read(dst.array(), dst.arrayOffset + dst.position(), want)
+            if (read > 0) dst.position(dst.position() + read)
+            read
+          } else {
+            val buf = new Array[Byte](want)
+            val read = in.read(buf, 0, want)
+            if (read > 0) dst.put(buf, 0, read)
+            read
+          }
+        if (n > 0) pos += n
         n
       }
     override def write(src: java.nio.ByteBuffer): Int =

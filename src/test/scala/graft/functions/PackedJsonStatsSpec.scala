@@ -172,7 +172,61 @@ class PackedJsonStatsSpec extends SparkSpec {
     s"""{"image":["0","1"],"input_ids":[${Seq.fill(512)(32000).mkString(",")},32001],"loss_mask":[],"text":[]}""",
     s"""{"image":[],"input_ids":[${(0 until 8000).mkString(",")}],"loss_mask":[${Seq.fill(8000)(1).mkString(",")}],"text":[]}""",
     s"""{"input_ids":[],"loss_mask":[]}""",
-    s"""{"image":null,"input_ids":[1],"loss_mask":null,"text":null}""")
+    s"""{"image":null,"input_ids":[1],"loss_mask":null,"text":null}""",
+    // boundary ints: the byte pass takes only -?(0|[1-9][0-9]*) inside
+    // the Int range and leaves the rest to the Jackson path
+    s"""{$ok,"input_ids":[2147483647,1,32001,32002]}""",
+    s"""{$ok,"input_ids":[-2147483648,1,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,2,32001,2147483648]}""",
+    s"""{$ok,"input_ids":[1,2,32001,-2147483649]}""",
+    s"""{$ok,"input_ids":[1,99999999999,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,00,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,-0,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,-,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,- 1,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,1.0,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,1e3,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,1E3,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,12a,32001,32002]}""",
+    s"""{$ok,"input_ids":[1,+1,32001,32002]}""",
+    // every length up to the Int range's and one past it
+    s"""{$ok,"input_ids":[${(1 to 10).map(k => "1234567890".take(k)).mkString(",")}]}""",
+    s"""{$ok,"input_ids":[${(1 to 10).map("-" + "9" * _).mkString(",")},32001,32002]}""",
+    s"""{$ok,"input_ids":[${(1 to 11).map("9" * _).mkString(",")}]}""",
+    s"""{$ok,"input_ids":[320010,3200,-32001,32001,32002]}""",
+    s"""{"image":["0"],"input_ids":[1,2],"loss_mask":[1,1.0],"text":[]}""",
+    s"""{"image":["0"],"input_ids":[1,2],"loss_mask":[1,2147483648],"text":[]}""",
+    // whitespace around every token, and whitespace Jackson refuses
+    " \t\r\n{ \"image\" :\n[ \"0\" ,\t\"1\" ] ,\r\"input_ids\" : [ 32001 , 32002 ,\n-7 ] ," +
+      " \"loss_mask\"\t:\t[\t1\t,\t0\t,\t1\t]\t,\"text\":[ ] } \r\n\t ",
+    s"""{$ok,"input_ids":[1,\f2,3,4]}""",
+    s"""{$ok,"input_ids":[1,2,3,4]}\u000b""",
+    // trailing whitespace next to trailing text
+    s"""{$ok,"input_ids":[1,2,3,4]} \n x""",
+    s"""{$ok,"input_ids":[1,2,3,4]}x \n""",
+    // escapes: a lone surrogate, a slash, every short form; raw DEL and
+    // raw U+2028; a bad hex digit
+    s"""{$ok,"input_ids":[1,2,3,4],"text":["a\\ud800b","\\/","\\"\\\\\\/\\b\\f\\n\\r\\t\\u00e9\\uD83D\\uDE00"]}""",
+    "{\"image\":[\"del\u007f\",\"ls\u2028ps\u2029\"],\"input_ids\":[1],\"loss_mask\":[1],\"text\":[]}",
+    s"""{$ok,"input_ids":[1,2,3,4],"text":["\\u00g0"]}""",
+    s"""{$ok,"input_ids":[1,2,3,4],"text":["\\u00"]}""",
+    // the edges of each UTF-8 length
+    "{\"image\":[\"\u0080\u07ff\u0800\ud7ff\ue000\uffff\",\"\ud800\udc00\udbff\udfff\"]," +
+      "\"input_ids\":[1],\"loss_mask\":[1],\"text\":[]}",
+    // duplicate keys inside the subset, empty arrays, empty strings
+    s"""{"image":["0"],"input_ids":[32001],"loss_mask":[1],"text":[],"input_ids":[32001,32002],"loss_mask":[1,1]}""",
+    """{"image":[],"input_ids":[],"loss_mask":[],"text":[]}""",
+    """{"image":["",""],"input_ids":[0],"loss_mask":[0],"text":[""]}""",
+    // keys that are near the schema's
+    s"""{$ok,"input_id":[1,2,3,4]}""",
+    s"""{$ok,"input_idss":[1,2,3,4]}""",
+    s"""{$ok,"":[1,2,3,4]}""",
+    // structure the byte pass refuses
+    s"""{$ok,"input_ids":[1,2,3,4],}""",
+    s"""{$ok "input_ids":[1,2,3,4]}""",
+    s"""{$ok,"input_ids":[1,2,3,4]]}""",
+    s"""{$ok,"input_ids"[1,2,3,4]}""",
+    s"""{$ok,"input_ids":[1,2,3,4]""")
 
   test("hostile json: every checked column equals the from_json spelling") {
     assertSameDocs(hostile)
@@ -222,11 +276,12 @@ class PackedJsonStatsSpec extends SparkSpec {
     assertSameDocs(randomBins(7L, 300))
   }
 
-  test("seeded mutations: dropped, inserted and replaced json chars") {
+  /** Seeded char-level mutations of random bins and hostile json. */
+  private lazy val mutated: Seq[String] = {
     val rnd = new scala.util.Random(11L)
     val alphabet = "{}[],:\"'\\ 0123456789-.eEnulltrNaIfyx_"
     val bases = randomBins(13L, 60).map(_.take(400)) ++ hostile
-    val mutated = (0 until 800).map { _ =>
+    (0 until 800).map { _ =>
       val b = new StringBuilder(bases(rnd.nextInt(bases.length)))
       (0 until 1 + rnd.nextInt(3)).foreach { _ =>
         val at = if (b.isEmpty) 0 else rnd.nextInt(b.length)
@@ -240,6 +295,9 @@ class PackedJsonStatsSpec extends SparkSpec {
       }
       b.toString
     }
+  }
+
+  test("seeded mutations: dropped, inserted and replaced json chars") {
     assertSameDocs(mutated)
   }
 
@@ -315,21 +373,132 @@ class PackedJsonStatsSpec extends SparkSpec {
       Seq(1, 1, 0, 0, 0, 0))
   }
 
+  /** `bytes` inside a text string of an otherwise canonical bin. */
+  private def inText(bytes: Array[Byte]): Array[Byte] =
+    """{"image":["0"],"input_ids":[32001,32002,1,2],"loss_mask":[0,1,1,1],"text":["a"""
+      .getBytes(UTF_8) ++ bytes ++ "b\"]}".getBytes(UTF_8)
+
+  /** Sequences the JDK decoder reports as malformed: overlong forms, a
+    * surrogate, a code point above U+10FFFF, stray and missing
+    * continuation bytes. */
+  private val badUtf8: Seq[Array[Byte]] = Seq(
+    Seq(0xc0, 0x80), Seq(0xc1, 0xbf), Seq(0xe0, 0x80, 0x80),
+    Seq(0xe0, 0x9f, 0xbf), Seq(0xed, 0xa0, 0x80), Seq(0xed, 0xbf, 0xbf),
+    Seq(0xf0, 0x8f, 0xbf, 0xbf), Seq(0xf4, 0x90, 0x80, 0x80),
+    Seq(0xf5, 0x80, 0x80, 0x80), Seq(0xff), Seq(0x80), Seq(0xbf),
+    Seq(0xc3), Seq(0xe2, 0x82), Seq(0xf0, 0x9f, 0x98), Seq(0xe2, 0x28, 0xa1))
+    .map(_.map(_.toByte).toArray)
+
+  private val good = s"""{$ok,"input_ids":[32001,32002,1,2]}""".getBytes(UTF_8)
+
+  /** Entries that are not valid UTF-8, all but the first otherwise
+    * well-formed. */
+  private val invalid: Seq[Array[Byte]] = Seq(
+    Array[Byte](0x7b, 0xff.toByte, 0x7d),
+    good.take(6) ++ Array(0xc3.toByte) ++ good.drop(6),
+    good ++ Array(0xe2.toByte, 0x82.toByte),
+    good.take(20) ++ Array(0xed.toByte, 0xa0.toByte, 0x80.toByte) ++
+      good.drop(20),
+    good.take(20) ++ Array(0xc0.toByte, 0xaf.toByte) ++ good.drop(20)) ++
+    badUtf8.map(inText)
+
+  /** Entries that end inside a string, in a truncated sequence. */
+  private val cut: Seq[Array[Byte]] = {
+    val open = inText(Array.empty).dropRight("b\"]}".length)
+    Seq(Seq(0xc3), Seq(0xe2, 0x82), Seq(0xf0, 0x9f, 0x98))
+      .map(b => open ++ b.map(_.toByte))
+  }
+
   test("invalid UTF-8 is an unparseable record, not a failed job") {
-    val good = s"""{$ok,"input_ids":[32001,32002,1,2]}""".getBytes(UTF_8)
-    val bad = Seq(
-      Array[Byte](0x7b, 0xff.toByte, 0x7d),
-      good.take(6) ++ Array(0xc3.toByte) ++ good.drop(6),
-      good ++ Array(0xe2.toByte, 0x82.toByte),
-      good.take(20) ++ Array(0xed.toByte, 0xa0.toByte, 0x80.toByte) ++
-        good.drop(20),
-      good.take(20) ++ Array(0xc0.toByte, 0xaf.toByte) ++ good.drop(20))
-    val got = rows(CheckStage.checked(samples(good +: bad)))
+    val got = rows(CheckStage.checked(samples(good +: invalid)))
     assert(!got.head.getAs[Boolean]("bad_parse"))
     got.tail.foreach { r =>
       assert(r.getAs[Boolean]("bad_parse"), r)
       assert(r.isNullAt(r.fieldIndex("n_tokens")), r)
     }
-    assert(interpreted(bad).forall(_ == Seq.fill(6)(null)))
+    assert(interpreted(invalid ++ cut).forall(_ == Seq.fill(6)(null)))
+  }
+
+  private def jsonBytes(p: TokenizeStage.Packed): Array[Byte] =
+    TokenizeStage.toSampleGroup(p).entries("json")
+
+  test("the byte pass declines or gives the Jackson path's row") {
+    val scanner = new PackedJsonScanner
+    var accepted, declined = 0
+    def check(d: Array[Byte]): Unit = {
+      val fast = scanner.byteStats(d)
+      if (fast == null) declined += 1
+      else {
+        accepted += 1
+        val slow = scanner.jacksonStats(d)
+        assert(fields(fast) == fields(slow),
+          s"\n json: ${new String(d, UTF_8)}")
+      }
+    }
+    // the spec's other corpora
+    ((hostile ++ randomBins(7L, 300) ++ randomBins(3L, 40) ++ mutated)
+      .map(_.getBytes(UTF_8)) ++ (good +: invalid) ++ cut).foreach(check)
+    // byte-level mutations of canonical bins: structure, digits,
+    // escapes, whitespace and UTF-8 lead and continuation bytes
+    val rnd = new scala.util.Random(17L)
+    val alphabet = ("{}[],:\"\\ \t\n\r\f0123456789-+.eEu/_abfnrtx".getBytes(UTF_8) ++
+      Seq(0x00, 0x1f, 0x7f, 0x80, 0x8f, 0x90, 0x9f, 0xa0, 0xbf, 0xc0, 0xc2,
+        0xdf, 0xe0, 0xed, 0xef, 0xf0, 0xf4, 0xf5, 0xff).map(_.toByte))
+    val bases = (0 until 40).map { i =>
+      jsonBytes(TokenizeStage.Packed(s"k$i", Seq.tabulate(i % 3)(_.toString),
+        Nil, Array.fill(1 + rnd.nextInt(30))(rnd.nextInt(33000) - 10) ++
+          Array(32000, 32001, 32002, Int.MinValue, Int.MaxValue),
+        Array.fill(rnd.nextInt(30))(rnd.nextInt(2)),
+        Seq.fill(1 + rnd.nextInt(2))(captions(rnd.nextInt(captions.length)))))
+    }
+    (0 until 6000).foreach { _ =>
+      val b = bases(rnd.nextInt(bases.length)).toBuffer
+      (0 until 1 + rnd.nextInt(3)).foreach { _ =>
+        val at = rnd.nextInt(b.length + 1)
+        val c = alphabet(rnd.nextInt(alphabet.length))
+        rnd.nextInt(3) match {
+          case 0 if at < b.length => b.remove(at)
+          case 1 => b.insert(at, c)
+          case _ if at < b.length => b(at) = c
+          case _ => b.append(c)
+        }
+      }
+      check(b.toArray)
+    }
+    // both readings are exercised on a real share of the inputs
+    assert(accepted > 1000 && declined > 1000, (accepted, declined))
+  }
+
+  /** Captions with the characters the bin writer escapes or carries
+    * through: quotes, backslashes, control characters, DEL, `/`,
+    * non-ASCII, emoji, U+2028, lone surrogates (written as `?`). */
+  private val captions: Seq[String] = Seq("the quick fox", "say \"hi\"",
+    "back\\slash", "tab\there", "new\nline", "ctrl\u0001\u001f", "del\u007f",
+    "slash/", "ünïcödé", "中文", "😀", "pair 𐀀", "lone \ud800", "\udc00low",
+    "ls\u2028ps\u2029", "  ", "</s><s>", "<im_patch>", "", "\u0000",
+    "a" * 300 + "é" + "b" * 17)
+
+  test("every bin the tokenize stage writes takes the byte pass") {
+    val scanner = new PackedJsonScanner
+    val rnd = new scala.util.Random(23L)
+    val extremes = Seq(Int.MinValue, Int.MaxValue, -1, 0, 32000, 32001, 32002,
+      -2147483647, 1000000000, -999999999)
+    val bins = randomBins(5L, 200).map(_.getBytes(UTF_8)) ++
+      (0 until 200).map { i =>
+        jsonBytes(TokenizeStage.Packed(s"k$i",
+          Seq.fill(rnd.nextInt(3))(captions(rnd.nextInt(captions.length))),
+          Nil,
+          Array.fill(rnd.nextInt(50))(
+            if (rnd.nextBoolean()) extremes(rnd.nextInt(extremes.length))
+            else rnd.nextInt()),
+          Array.fill(rnd.nextInt(50))(rnd.nextInt(3) - 1),
+          Seq.fill(rnd.nextInt(4))(captions(rnd.nextInt(captions.length)) +
+            captions(rnd.nextInt(captions.length)))))
+      }
+    bins.foreach { d =>
+      val fast = scanner.byteStats(d)
+      assert(fast != null, s"\n declined: ${new String(d, UTF_8)}")
+      assert(fields(fast) == fields(scanner.jacksonStats(d)))
+    }
   }
 }

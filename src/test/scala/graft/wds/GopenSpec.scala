@@ -288,4 +288,47 @@ class GopenSpec extends SparkSpec {
       conf.unset("fs.ais.impl")
     }
   }
+
+  test("the seekable channel reads into heap and direct buffers alike") {
+    val file = Files.createTempFile("gopen_seek", ".bin")
+    val data = Array.tabulate(10000)(i => (i * 31 + i / 7).toByte)
+    Files.write(file, data)
+    val ch = Gopen.openSeekable(file.toString,
+      spark.sparkContext.hadoopConfiguration).get
+    try {
+      /** Fill `dst` from `at` until it is full or the channel ends. */
+      def readAt(at: Long, dst: java.nio.ByteBuffer): Int = {
+        ch.position(at)
+        val p0 = dst.position()
+        var n = 0
+        while (n >= 0 && dst.hasRemaining) n = ch.read(dst)
+        assert(ch.position() == at + dst.position() - p0)
+        dst.position() - p0
+      }
+      def bytes(b: java.nio.ByteBuffer, from: Int, n: Int): Seq[Byte] =
+        (from until from + n).map(b.get)
+      // a heap buffer over the middle of a larger array, at a non-zero
+      // position: only [position, limit) of that slice is written
+      val backing = Array.fill[Byte](600)(-1)
+      val heap = java.nio.ByteBuffer.wrap(backing, 50, 500).slice()
+      heap.position(20)
+      assert(heap.arrayOffset == 50)
+      assert(readAt(1234, heap) == 480)
+      assert(bytes(heap, 20, 480) == data.slice(1234, 1714).toSeq)
+      assert(backing.take(70).forall(_ == -1) &&
+        backing.drop(550).forall(_ == -1))
+      val direct = java.nio.ByteBuffer.allocateDirect(500)
+      direct.position(20)
+      assert(readAt(1234, direct) == 480)
+      assert(bytes(direct, 20, 480) == data.slice(1234, 1714).toSeq)
+      // a short read at the end of the file, then end of stream
+      for (b <- Seq(java.nio.ByteBuffer.allocate(100),
+          java.nio.ByteBuffer.allocateDirect(100))) {
+        assert(readAt(data.length - 7L, b) == 7)
+        assert(b.position() == 7 && b.remaining() == 93)
+        assert(bytes(b, 0, 7) == data.takeRight(7).toSeq)
+        assert(ch.read(b) == -1)
+      }
+    } finally ch.close()
+  }
 }
